@@ -82,27 +82,14 @@ def minhash_params(num: int) -> list[tuple[int, int]]:
     return [(h(f"a:{i}") % (MINHASH_P - 1) + 1, h(f"b:{i}") % MINHASH_P) for i in range(num)]
 
 
-def affine_minhash_cols(col: Column | str, num: int, fast: bool = False) -> list[Column]:
-    """``num`` MinHash hash columns from one base hash of ``col``.
-
-    Column-form twin of ``affine_minhash_spark_sqls`` kept as the
-    readable reference definition of the hash family (no production
-    caller since the r13 selectExpr switch) — the two MUST stay in
-    lockstep or signatures silently change."""
-    base = (hash64(col, fast=fast) % F.lit(MINHASH_P)).alias("__mhbase")
-    return [
-        ((F.lit(a) * base + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_params(num))
-    ]
-
-
 def affine_minhash_spark_sqls(expr: str, num: int, fast: bool = False) -> list[str]:
-    """Spark-SQL text for each hash in the affine family — the
-    ``affine_minhash_cols`` expression trees as strings (one selectExpr
-    parse instead of ~6 py4j round trips per hash; the base-hash
-    subtree repeats per column exactly as the Column form inlines it,
-    and codegen subexpression elimination computes it once per row
-    either way)."""
+    """Spark-SQL text for each hash in the affine family ``h_i = (a_i *
+    (hash64(expr) % P) + b_i) % P`` with the ``minhash_params``
+    constants — the one Spark definition of the family (one selectExpr
+    parse instead of ~6 py4j round trips per hash per Column; the
+    base-hash subtree repeats per column, and codegen subexpression
+    elimination computes it once per row). ``affine_minhash_duckdb_sql``
+    is its oracle-side twin."""
     base = f"({hash64_spark_sql(expr, fast=fast)} % {MINHASH_P})"
     return [
         f"({a} * {base} + {b}) % {MINHASH_P} AS h{i}"

@@ -8,14 +8,17 @@ reasons about is the MICRO-BATCH, so this module records one
 durations, state-store rows, and any ``df.observe`` named metrics
 (including the chaos injection hit counters — F5 on streams).
 
-Each progress also lands as an in-process ``Span`` (obs/tracing.py),
-so one trace timeline covers driver actions, tasks, and micro-batches
-— the streaming completion of the reference's O1-O5 surface.
+Each progress also lands as an in-process ``Span`` (obs/tracing.py)
+on the driver spans' wall-clock timeline: it starts at the progress
+event's trigger ``timestamp`` and lasts ``triggerExecution``, so one
+trace timeline covers driver actions, tasks, and micro-batches — the
+streaming completion of the reference's O1-O5 surface.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from datetime import datetime, timedelta, timezone
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -33,6 +36,15 @@ class BatchRecord:
     duration_ms: dict[str, int]
     state_rows: int
     observed: dict[str, dict[str, Any]]
+
+
+def _epoch_ns(timestamp: str) -> int:
+    """Nanoseconds since the epoch of a progress event's ISO-8601 UTC
+    trigger timestamp (e.g. ``2026-10-19T06:01:17.123Z``), the clock
+    ``time.time_ns`` stamps driver spans with."""
+    t = datetime.fromisoformat(timestamp.replace("Z", "+00:00"))
+    since = t - datetime(1970, 1, 1, tzinfo=timezone.utc)
+    return since // timedelta(microseconds=1) * 1_000
 
 
 class StreamingMetricsCollector(StreamingQueryListener):
@@ -77,6 +89,7 @@ class StreamingMetricsCollector(StreamingQueryListener):
                 observed=observed,
             )
             self.records.append(rec)
+            start_ns = _epoch_ns(p.timestamp)
             total_ns = int(rec.duration_ms.get("triggerExecution", 0)) * 1_000_000
             _RECORDED.append(
                 Span(
@@ -88,8 +101,8 @@ class StreamingMetricsCollector(StreamingQueryListener):
                         "stream.state_rows": rec.state_rows,
                         **{f"stream.duration_ms.{k}": v for k, v in rec.duration_ms.items()},
                     },
-                    start_ns=0,
-                    end_ns=total_ns,
+                    start_ns=start_ns,
+                    end_ns=start_ns + total_ns,
                     status="OK",
                 )
             )

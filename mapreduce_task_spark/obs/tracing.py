@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from collections import deque
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -48,7 +49,11 @@ class Span:
         return (self.end_ns - self.start_ns) / 1e6
 
 
-_RECORDED: list[Span] = []
+# The in-process span sink is a bounded ring: a long-running process (a
+# crawl loop, a streaming listener) keeps only the newest spans instead
+# of growing forever. Exported OTel spans are unaffected.
+MAX_RECORDED_SPANS = 10_000
+_RECORDED: deque[Span] = deque(maxlen=MAX_RECORDED_SPANS)
 
 
 def get_recorded_spans() -> list[Span]:

@@ -328,64 +328,3 @@ def pagerank_int(
         # PQ codebook fit. Per-round pinning stays.
         ranks = pin(ranks)
     return ranks.select("node", "rank_pu")
-
-
-def pagerank_int_sql(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 6,
-    damping_ppm: int = 850_000,
-) -> DataFrame:
-    """``pagerank_int`` composed as ONE unrolled SQL CTE chain —
-    bit-for-bit the same integer pico-unit arithmetic (equality pinned
-    in tests), expressed the way the DuckDB oracle already expresses
-    it, so Catalyst analyzes a single statement once instead of
-    re-analyzing ~5 DataFrame trees per round.
-
-    RECORDED NEGATIVE RESULT (r11, the r10-verdict experiment): this
-    variant is NOT the production path. Measured at sf0.1 (canary
-    effective_cores 18.0, isolated best-of-3): plan build DOES drop
-    6.7 s -> 1.6 s as theorized, but execution explodes 0.08 s ->
-    23.4 s. Spark's InlineCTE fully inlines every multi-referenced
-    CTE here (optimized plan: 697 relation scans, zero WithCTE /
-    CTERelationRef nodes — each round's rank frame is re-derived by
-    BOTH of the next round's consumers, compounding per round), so
-    the single-statement form trades constant per-round analysis for
-    exponential re-execution. ``pagerank_int``'s per-round
-    lazy-checkpoint pin remains the right shape: the pin is what makes
-    each round's output a leaf for the next round's two consumers.
-    Kept as the oracle-parity twin and for the equality test; do not
-    use beyond ~2 iterations on real data. See BASELINE.md r11."""
-    d6 = damping_ppm * 1_000_000
-    rounds = ",".join(
-        f"""
-dang{i} AS (SELECT CAST(coalesce(sum(p.r), 0) AS BIGINT) AS dm
-            FROM pr{i - 1} p LEFT JOIN outd o ON o.node = p.node
-            WHERE o.node IS NULL),
-ctr{i} AS (SELECT e.dst AS node,
-                  CAST(sum(((p.r * {damping_ppm}) DIV 1000000) DIV o.outd)
-                       AS BIGINT) AS c
-           FROM pr{i - 1} p JOIN outd o ON o.node = p.node
-           JOIN e ON e.src = p.node
-           GROUP BY e.dst),
-pr{i} AS (SELECT v.node,
-                 CAST(({PAGERANK_SCALE} - {d6}) DIV nc.n
-                      + (({damping_ppm} * d.dm) DIV 1000000) DIV nc.n
-                      + coalesce(c.c, 0) AS BIGINT) AS r
-          FROM verts v CROSS JOIN nc CROSS JOIN dang{i} d
-          LEFT JOIN ctr{i} c ON c.node = v.node)"""
-        for i in range(1, iters + 1)
-    )
-    q = f"""
-WITH e AS (SELECT {src} AS src, {dst} AS dst FROM {{edges}}),
-outd AS (SELECT src AS node, count(*) AS outd FROM e GROUP BY src),
-verts AS (SELECT DISTINCT node
-          FROM (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-nc AS (SELECT count(*) AS n FROM verts),
-pr0 AS (SELECT node, CAST({PAGERANK_SCALE} DIV n AS BIGINT) AS r
-        FROM verts CROSS JOIN nc),
-{rounds}
-SELECT node, r AS rank_pu FROM pr{iters}
-"""
-    return edges.sparkSession.sql(q, edges=edges)

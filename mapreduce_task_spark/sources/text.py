@@ -51,7 +51,10 @@ def read_tab_pairs(
     )
     # split(_, '\t', 2): at most 2 parts, like Java's split("\t", 2)
     parts = df.select(F.split(F.col("value"), "\t", 2).alias("p"), F.col("value"))
-    is_malformed = (F.trim(F.col("value")) == "") | (F.size(F.col("p")) < 2)
+    # trim-empty as Java's String.trim() sees it: every char <= U+0020
+    # (a tab-only line is blank), not only the spaces Spark's trim strips
+    is_blank = F.col("value").rlike("^[\\x00-\\x20]*$")
+    is_malformed = is_blank | (F.size(F.col("p")) < 2)
     if observation is not None:
         parts = parts.observe(
             observation,

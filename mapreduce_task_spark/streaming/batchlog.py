@@ -179,23 +179,44 @@ def max_folded_id(ids: list[int]) -> int:
 # stop-stream -> merge in ANOTHER process -> restart-stream in this
 # same long-lived process: the restarted stream would trust a stale
 # pre-merge value and re-write already-folded replayed batches. Hence
-# ``invalidate_watermark_cache``: every streaming attach wrapper pops
-# the key at (re)start, so the first write of each stream incarnation
-# re-reads the file. Keyed by watermark path.
+# ``invalidate_watermark_cache``: every streaming attach wrapper
+# (``attach_batch_sink``) pops the key at (re)start, so the first write
+# of each stream incarnation re-reads the file. Keyed by watermark path.
 _WM_CACHE: dict[str, int] = {}
 
 
 def invalidate_watermark_cache(path: str) -> None:
     """Drop the cached merged watermark for log ``path``, forcing the
     next consult to re-read the watermark file. MUST be called when an
-    ingest stream (re)starts in a long-lived process (the streaming_*
-    attach wrappers do) — a segment merge run in a different process
-    while this one's stream was merely stopped would otherwise leave
+    ingest stream (re)starts in a long-lived process (``attach_batch_sink``
+    does) — a segment merge run in a different process while this
+    one's stream was merely stopped would otherwise leave
     this process trusting a stale pre-merge value, re-writing replayed
     folded batches and double-counting their rows in every delta
     read. Callers wiring ``append_*``/``write_batch_partition`` into
     their own foreachBatch must call this at stream start themselves."""
     _WM_CACHE.pop(_watermark_path(path), None)
+
+
+def attach_batch_sink(stream_df: DataFrame, checkpoint: str, body, logs=()):
+    """The one attach step every ``streaming_*`` sink wrapper shares:
+    invalidate the merged-watermark cache of each log the sink writes
+    (``logs``), run ``body(batch_df, batch_id)`` per non-empty
+    micro-batch through ``foreachBatch``, and drain the available input
+    (``availableNow``). Returns the StreamingQuery."""
+    for log in logs:
+        invalidate_watermark_cache(log)
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            body(batch_df, batch_id)
+
+    return (
+        stream_df.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def merged_watermark(spark, path: str) -> int:
@@ -289,8 +310,9 @@ def compact_log(
     function of the selected live rows (sketch merge for the sketch
     store, ``distinct`` for digest sets) returning the rows of the
     merged partition, WITHOUT the batch column. ``sub_partition_cols``
-    must match the log's physical layout (``write_batch_partition``)
-    and survive the fold.
+    names the log's physical layout (``write_batch_partition``) and
+    must survive the fold; a name the log has no column for is skipped,
+    so one call serves cluster-partitioned and flat logs alike.
 
     Crash/replay safety (id-space protocol, module docstring):
 
@@ -332,6 +354,7 @@ def compact_log(
             "compacting this log"
         )
     log = spark.read.parquet(path)
+    sub_partition_cols = [c for c in sub_partition_cols if c in log.columns]
     ids = batch_ids(log)
     covered = covered_watermark(ids)
     # compacting below the existing watermark never un-merges; the
@@ -387,6 +410,27 @@ def drop_partitions(spark, path: str, ids: list[int]) -> int:
                     " — re-run to resume"
                 )
             dropped += 1
+    return dropped
+
+
+def drop_logs(spark, root: str, names) -> list[str]:
+    """Delete the directories ``<root>/<name>`` outright (monitor logs
+    and baselines on a reset, retired index versions) and drop their
+    cached merged watermarks. Absent names are skipped; a FALSE delete
+    raises like every protocol step. Returns the names that existed and
+    were removed."""
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+    dropped = []
+    for name in names:
+        p = jvm.org.apache.hadoop.fs.Path(f"{root}/{name}")
+        if fs.exists(p):
+            if not fs.delete(p, True):
+                raise RuntimeError(f"could not remove {root}/{name}")
+            dropped.append(name)
+        invalidate_watermark_cache(f"{root}/{name}")
     return dropped
 
 

@@ -44,8 +44,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.ranking import doc_tokens, score_postings
 from .batchlog import (
     BATCH_COL,
+    attach_batch_sink,
     compact_log,
-    invalidate_watermark_cache,
     log_exists,
     log_live,
     write_batch_partition,
@@ -102,19 +102,11 @@ def streaming_bm25_append(
     StreamingQuery. The base index (``bm25_build_index``) must exist
     and carry the exact counters (``n_docs_exact``, ``sum_dl``)."""
 
-    for d in (_POSTINGS, _DF, _STATS):
-        invalidate_watermark_cache(f"{index_path}/{d}")
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_text_batch(batch_df, batch_id, index_path, id_col, text_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        lambda df, bid: append_text_batch(df, bid, index_path, id_col, text_col),
+        [f"{index_path}/{d}" for d in (_POSTINGS, _DF, _STATS)],
     )
 
 

@@ -50,9 +50,20 @@ embedding step itself is upstream of this sink, like extraction).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, functions as F
 
-from .batchlog import invalidate_watermark_cache, write_batch_partition
+from .ann_delta import (
+    FAMILIES,
+    compact_delta,
+    compact_drift,
+    compact_saturation,
+    drift_signal,
+    index_logs,
+    saturation_signal,
+)
+from .batchlog import attach_batch_sink, write_batch_partition
 from .bm25_ingest import _DF, _POSTINGS, _STATS, append_text_batch
 from .dedup_ingest import ingest_batch_neardup
 from .ivf_ingest import append_batch as ivf_append_batch
@@ -197,37 +208,15 @@ def streaming_crawl_ingest(
     ``quality_model`` adds the learned-filter stage (see
     ``crawl_batch``); the fitted PipelineModel is captured in the sink
     closure and reused across micro-batches."""
-    for log in [
-        corpus_path,
-        sig_path,
-        quality_path,
-        *(
-            [f"{bm25_path}/{d}" for d in (_POSTINGS, _DF, _STATS)]
-            if bm25_path is not None
-            else []
-        ),
-        *(
-            [f"{ivf_path}/delta", f"{ivf_path}/drift"]
-            if ivf_path is not None
-            else []
-        ),
-        *(
-            [f"{ivfpq_path}/delta", f"{ivfpq_path}/drift"]
-            if ivfpq_path is not None
-            else []
-        ),
-        *(
-            [f"{ivfsq_path}/delta", f"{ivfsq_path}/drift", f"{ivfsq_path}/sat"]
-            if ivfsq_path is not None
-            else []
-        ),
-    ]:
-        if log is not None:
-            invalidate_watermark_cache(log)
+    logs = [corpus_path, sig_path]
+    if quality_path is not None:
+        logs.append(quality_path)
+    if bm25_path is not None:
+        logs += [f"{bm25_path}/{d}" for d in (_POSTINGS, _DF, _STATS)]
+    for kind, path in _ann_paths(ivf_path, ivfpq_path, ivfsq_path):
+        logs += index_logs(kind, path)
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         crawl_batch(
             batch_df, batch_id, corpus_path, sig_path,
             bm25_path=bm25_path, ivf_path=ivf_path, ivfpq_path=ivfpq_path,
@@ -240,12 +229,18 @@ def streaming_crawl_ingest(
             ivfpq_per_list=ivfpq_per_list,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return attach_batch_sink(stream_df, checkpoint, body, logs)
+
+
+def _ann_paths(ivf_path, ivfpq_path, ivfsq_path) -> list[tuple[str, str]]:
+    """(kind, path) for each ANN index the crawl maintains."""
+    return [
+        (kind, path)
+        for kind, path in (
+            ("ivf", ivf_path), ("ivfpq", ivfpq_path), ("ivfsq", ivfsq_path)
+        )
+        if path is not None
+    ]
 
 
 def compact_crawl(
@@ -298,7 +293,6 @@ def compact_crawl(
         compact_stats_delta,
     )
     from .dedup_ingest import compact_corpus, compact_signatures
-    from .ivf_ingest import compact_delta as compact_ivf_delta
     from .quality_monitor import compact_quality
 
     done: dict[str, int] = {}
@@ -319,32 +313,13 @@ def compact_crawl(
             lambda: compact_df_delta(spark, bm25_path, committed_batch))
         run("bm25_stats", f"{bm25_path}/delta_stats",
             lambda: compact_stats_delta(spark, bm25_path, committed_batch))
-    if ivf_path is not None:
-        from .ivf_ingest import compact_drift as compact_ivf_drift
-
-        run("ivf_delta", f"{ivf_path}/delta",
-            lambda: compact_ivf_delta(spark, ivf_path, committed_batch))
-        run("ivf_drift", f"{ivf_path}/drift",
-            lambda: compact_ivf_drift(spark, ivf_path, committed_batch))
-    if ivfpq_path is not None:
-        from .ivfpq_ingest import compact_delta as compact_ivfpq_delta
-        from .ivfpq_ingest import compact_drift as compact_ivfpq_drift
-
-        run("ivfpq_delta", f"{ivfpq_path}/delta",
-            lambda: compact_ivfpq_delta(spark, ivfpq_path, committed_batch))
-        run("ivfpq_drift", f"{ivfpq_path}/drift",
-            lambda: compact_ivfpq_drift(spark, ivfpq_path, committed_batch))
-    if ivfsq_path is not None:
-        from .ivfsq_ingest import compact_delta as compact_ivfsq_delta
-        from .ivfsq_ingest import compact_drift as compact_ivfsq_drift
-        from .ivfsq_ingest import compact_saturation as compact_ivfsq_sat
-
-        run("ivfsq_delta", f"{ivfsq_path}/delta",
-            lambda: compact_ivfsq_delta(spark, ivfsq_path, committed_batch))
-        run("ivfsq_drift", f"{ivfsq_path}/drift",
-            lambda: compact_ivfsq_drift(spark, ivfsq_path, committed_batch))
-        run("ivfsq_sat", f"{ivfsq_path}/sat",
-            lambda: compact_ivfsq_sat(spark, ivfsq_path, committed_batch))
+    compactors = {
+        "delta": compact_delta, "drift": compact_drift, "sat": compact_saturation,
+    }
+    for kind, path in _ann_paths(ivf_path, ivfpq_path, ivfsq_path):
+        for log in ("delta", *FAMILIES[kind].monitors):
+            run(f"{kind}_{log}", f"{path}/{log}",
+                partial(compactors[log], spark, path, committed_batch))
     run("quality", quality_path,
         lambda: compact_quality(spark, quality_path, committed_batch))
     for root in retrain_roots:
@@ -393,25 +368,21 @@ def crawl_health(
     merges of the mergeable monitor rows per index — safe on a
     schedule against a 100 TB deployment."""
     from ..operators.pq import index_health
-    from . import ivf_ingest, ivfpq_ingest, ivfsq_ingest
     from .batchlog import log_exists
 
     frames = []
-    for path, mod in (
-        (ivf_path, ivf_ingest),
-        (ivfpq_path, ivfpq_ingest),
-        (ivfsq_path, ivfsq_ingest),
-    ):
-        if path is None:
-            continue
+    for kind, path in _ann_paths(ivf_path, ivfpq_path, ivfsq_path):
+        monitors = FAMILIES[kind].monitors
         h = index_health(spark, path).select(
             F.lit(path).alias("index_path"), "*"
         )
         sig = None
-        if log_exists(spark, f"{path}/drift") and _path_exists(
-            spark, f"{path}/drift_base"
+        if (
+            "drift" in monitors
+            and log_exists(spark, f"{path}/drift")
+            and _path_exists(spark, f"{path}/drift_base")
         ):
-            sig = mod.drift_signal(spark, path, retrain_ratio)
+            sig = drift_signal(spark, path, retrain_ratio)
         if sig is None:
             sig = spark.range(1).select(
                 F.lit(None).cast("bigint").alias("drift_n"),
@@ -432,8 +403,8 @@ def crawl_health(
                 F.col("retrain"),
             )
         sat = None
-        if mod is ivfsq_ingest and log_exists(spark, f"{path}/sat"):
-            sat = ivfsq_ingest.saturation_signal(spark, path, refit_frac)
+        if "sat" in monitors and log_exists(spark, f"{path}/sat"):
+            sat = saturation_signal(spark, path, refit_frac)
         if sat is None:
             sat = spark.range(1).select(
                 F.lit(None).cast("double").alias("frac_clamped"),

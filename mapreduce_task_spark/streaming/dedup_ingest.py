@@ -57,8 +57,8 @@ from ..operators.dedup import incremental_exact_dedup, incremental_minhash_dedup
 from ..operators.pinning import lazy_checkpoint as _lazy_checkpoint
 from .batchlog import (
     BATCH_COL,
+    attach_batch_sink,
     compact_log,
-    invalidate_watermark_cache,
     log_exists,
     read_before,
     write_batch_partition,
@@ -172,22 +172,14 @@ def streaming_dedup_ingest(
     """Attach the dedup-ingest sink to a document stream; returns the
     StreamingQuery. ``seed_path`` points at a ``bootstrap_digests``
     dataset to dedup against a pre-existing corpus from batch 0."""
-    invalidate_watermark_cache(corpus_path)
-    invalidate_watermark_cache(digest_path)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_batch(
-            batch_df, batch_id, corpus_path, digest_path, id_col, text_col,
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        lambda df, bid: ingest_batch(
+            df, bid, corpus_path, digest_path, id_col, text_col,
             seed_path=seed_path,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        [corpus_path, digest_path],
     )
 
 
@@ -352,22 +344,14 @@ def streaming_neardup_ingest(
     the StreamingQuery. ``seed_path`` points at a
     ``bootstrap_signatures`` dataset to screen against a pre-existing
     corpus from batch 0."""
-    invalidate_watermark_cache(corpus_path)
-    invalidate_watermark_cache(sig_path)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_batch_neardup(
-            batch_df, batch_id, corpus_path, sig_path, id_col, text_col,
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        lambda df, bid: ingest_batch_neardup(
+            df, bid, corpus_path, sig_path, id_col, text_col,
             threshold, seed_path=seed_path,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        [corpus_path, sig_path],
     )
 
 

@@ -1,48 +1,21 @@
-"""Streaming IVF index maintenance: keep a persisted ANN index fresh
-as embeddings stream in, without rebuilding it per batch.
+"""Streaming IVF index maintenance: keep a persisted IVF-Flat index
+(``ivf_build_index``: coarse centroids + cluster-partitioned inverted
+lists of exact quantized vectors) fresh as embeddings stream in.
 
-Production ANN serving splits into build-once (``ivf_build_index``:
-train the coarse quantizer, write cluster-partitioned inverted lists)
-and search-many (``ivf_search_index``: probe ``nprobe`` lists with
-partition pruning). What's missing between the two is FRESHNESS — a
-crawler keeps producing embeddings, and re-running the full build per
-micro-batch would rescan the whole corpus. The standard fix (FAISS,
-Lucene-style) is an append log under a FROZEN quantizer:
+The delta protocol — append, compaction, segment merge, drift monitor —
+is the one shared by every ANN family, in ``ann_delta.py``; this module
+supplies the IVF-Flat codec pieces:
 
-- Each micro-batch is assigned to the existing centroids (one
+- ``append_batch`` assigns each batch to the FROZEN centroids (one
   broadcast argmin over the k-row quantizer — shuffle-free, batch-
-  proportional work; the quantizer is NOT retrained, so assignments
-  are stable and deterministic) and appended to ``<index>/delta``,
-  partitioned by (``__batch``, cluster). The ``batchlog`` protocol
-  makes replays idempotent: the body is deterministic in (frozen
-  centroids, batch rows), so a crash-replayed batch dynamically
-  overwrites exactly its own partition tree with identical rows.
-- Search probes BASE lists and the delta log's live view as two
-  pruned scans (the broadcast probe join prunes each side to the
-  probed clusters) and merges the scored candidates before the top-k
-  window — results are identical to a full rebuild over base ∪ delta
-  under the same quantizer.
-- ``compact_delta`` folds committed batch partitions into the
-  negative-id partition (rows are immutable vectors — the fold is a
-  re-selection; the win is bounded file/partition counts).
-- ``merge_delta_into_base`` is the heavyweight maintenance op
-  (Lucene's segment merge): rewrite base lists = base ∪ delta live
-  view, then drop the delta — after which a fresh quantizer retrain
-  (``ivf_build_index``) can be scheduled offline if drift between the
-  frozen centroids and the data distribution has grown.
-
-Drift is the documented tradeoff of every append-under-frozen-
-quantizer design: new vectors far from all centroids still land in
-their nearest list, inflating it; recall for them is unchanged
-(search probes by the same metric) but list-size skew grows until a
-retrain. At 100 TB this is the right shape — per-batch cost is
-O(batch), index reads stay partition-pruned, and retrains are rare,
-scheduled, and offline. Since r11 drift is MEASURED, not just named:
-each appended batch lands a mergeable assignment-distance row,
-``drift_baseline`` records the build corpus's own number, and
-``drift_signal`` exposes the retrain trigger (the ivfpq_ingest
-pattern, minus the reconstruction-error term a flat index has no
-codes for).
+  proportional) and lands (id, qv, nq, cluster) rows in the delta;
+- ``search_with_delta`` cosine-scores base lists and the delta through
+  their own joins against the broadcast probe set — results identical
+  to a full rebuild over base ∪ delta under the same quantizer;
+- the drift row carries ``sum_assign_d`` only: the flat index stores
+  exact vectors, so the one drifting quantity is coarse-assignment fit
+  (list skew, falling recall at fixed nprobe). ``delta_skew_report``
+  shows where that skew is sending probe cost.
 """
 
 from __future__ import annotations
@@ -56,14 +29,17 @@ from ..operators.similarity import (
     quantized_cosine,
     with_quantized,
 )
-from .batchlog import (
-    BATCH_COL,
-    compact_log,
-    invalidate_watermark_cache,
-    log_live,
-    merge_log_into_base,
-    write_batch_partition,
+from .ann_delta import allowed_only, index_logs, land_batch
+from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
+    compact_delta,
+    compact_drift,
+    delta_skew_report,
+    drift_signal,
+    merge_delta_into_base,
+    read_drift_trend,
+    reset_drift,
 )
+from .batchlog import attach_batch_sink, log_live
 
 
 def append_batch(
@@ -77,29 +53,22 @@ def append_batch(
 ) -> None:
     """Assign one (micro-)batch of embeddings to the index's frozen
     centroids and land it in the delta log's own batch partition,
-    sub-partitioned by cluster (same physical shape as the base
-    lists, so searches prune identically). ``drift=True`` (default)
-    also lands one mergeable drift-monitor row for the batch (see the
-    drift section below) — one extra map-only pass + 1-row aggregate,
-    replay-idempotent like the delta write itself."""
+    sub-partitioned by cluster. ``drift=True`` (default) also lands one
+    mergeable drift-monitor row for the batch — one extra map-only pass
+    + 1-row aggregate, replay-idempotent like the delta write itself.
+    ``prequantized=True`` takes (id, qv, nq) rows (the retrain carry
+    path)."""
     spark = batch_df.sparkSession
     cents = spark.read.parquet(f"{index_path}/centroids")
     if prequantized:
-        # retrain carry / replay path: batch_df IS (id, qv, nq) rows
         qd = batch_df.select(id_col, "qv", "nq")
     else:
         qd = with_quantized(batch_df, vec_col).select(id_col, "qv", "nq")
     assigned = assign_clusters(qd, cents, id_col)
-    write_batch_partition(
-        assigned,
-        batch_id,
-        f"{index_path}/delta",
-        sub_partition_cols=("cluster",),
+    land_batch(
+        "ivf", index_path, batch_id, assigned,
+        {"drift": _ivf_drift_row(assigned, cents)} if drift else {},
     )
-    if drift:
-        write_batch_partition(
-            _ivf_drift_row(assigned, cents), batch_id, f"{index_path}/drift"
-        )
 
 
 def streaming_ivf_append(
@@ -111,25 +80,12 @@ def streaming_ivf_append(
 ):
     """Attach the append sink to an embedding stream; returns the
     StreamingQuery. The index (``ivf_build_index``) must exist."""
-
-    invalidate_watermark_cache(f"{index_path}/delta")
-    invalidate_watermark_cache(f"{index_path}/drift")
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_batch(batch_df, batch_id, index_path, id_col, vec_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        lambda df, bid: append_batch(df, bid, index_path, id_col, vec_col),
+        index_logs("ivf", index_path),
     )
-
-
-def _delta_live(spark: SparkSession, index_path: str) -> DataFrame | None:
-    return log_live(spark, f"{index_path}/delta")
 
 
 def search_with_delta(
@@ -151,11 +107,8 @@ def search_with_delta(
     probe set (rather than a union of scans before the join), so
     partition pruning to the probed clusters holds on base AND delta
     independently; the merged candidates feed one top-k window.
-
     ``filter_ids`` pre-filters candidates on BOTH sides to an
-    allow-list before scoring — the
-    ``ivf_search_index(filter_ids=)`` filtered-search contract
-    extended over base and streamed-in rows alike."""
+    allow-list before scoring."""
     cents = spark.read.parquet(f"{index_path}/centroids")
     qd = with_quantized(queries, vec_col).select(id_col, "qv", "nq")
     probes = probe_clusters(qd, cents, id_col, nprobe=nprobe).select(
@@ -165,12 +118,6 @@ def search_with_delta(
         "cluster",
     )
 
-    allowed = (
-        None
-        if filter_ids is None
-        else filter_ids.select(F.col(id_col).alias("cand_id"))
-    )
-
     def scored(lists: DataFrame) -> DataFrame:
         cand = lists.select(
             F.col(id_col).alias("cand_id"),
@@ -178,11 +125,9 @@ def search_with_delta(
             F.col("nq").alias("nq_c"),
             "cluster",
         )
-        if allowed is not None:
-            cand = cand.join(allowed, "cand_id", "leftsemi")
         return (
             F.broadcast(probes)
-            .join(cand, "cluster")
+            .join(allowed_only(cand, filter_ids, id_col), "cluster")
             .filter(F.col("cand_id") != F.col("query_id"))
             .select(
                 "query_id",
@@ -196,119 +141,13 @@ def search_with_delta(
         )
 
     cand_scored = scored(spark.read.parquet(f"{index_path}/lists"))
-    delta = _delta_live(spark, index_path)
+    delta = log_live(spark, f"{index_path}/delta")
     if delta is not None:
         cand_scored = cand_scored.unionByName(scored(delta))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
     return cand_scored.select("*", F.row_number().over(w).alias("rank")).filter(
         F.col("rank") <= k
     )
-
-
-def compact_delta(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold delta partitions ``__batch <= up_to_batch`` into the
-    negative-id partition (rows are immutable assigned vectors — the
-    fold re-selects them; the win is a bounded partition/file count).
-    The delta is append-only state never read back by the sink body,
-    so like the sketch store — and unlike the dedup logs —
-    ``up_to_batch`` need not be checkpoint-committed; a replay just
-    leaves a dead covered directory that readers ignore."""
-    return compact_log(
-        spark,
-        f"{index_path}/delta",
-        up_to_batch,
-        lambda live: live.drop(BATCH_COL),
-        sub_partition_cols=("cluster",),
-    )
-
-
-def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
-    """Rewrite the base inverted lists as base ∪ delta live view and
-    drop the merged delta partitions — the offline segment-merge, on
-    the shared marker-committed protocol (``batchlog.
-    merge_log_into_base``): side-directory write, marker commit,
-    independently resumable swap, targeted partition deletes. Crash
-    recovery is a re-run of this function — safe even if the append
-    stream was restarted first (batches appended after a crashed
-    merge survive; the committed merge's rows can never be lost to a
-    stale-base re-merge). Returns the number of rows merged in from
-    the delta (0 on a no-op or resume call). True multi-writer
-    atomicity needs a table format (Delta/Iceberg) — out of scope by
-    design."""
-
-    def write_merged(live: DataFrame, name: str) -> None:
-        base = spark.read.parquet(f"{index_path}/{name}")
-        base.unionByName(live.select(*base.columns)).write.mode(
-            "overwrite"
-        ).partitionBy("cluster").parquet(f"{index_path}/{name}_merged")
-
-    return merge_log_into_base(
-        spark, index_path, "delta", ["lists"], write_merged
-    )
-
-
-def delta_skew_report(spark: SparkSession, index_path: str) -> DataFrame:
-    """Per-cluster list sizes, base vs delta — the quantizer-drift
-    signal that decides when ``merge_delta_into_base`` + an offline
-    retrain (``ivf_build_index``) are due. Columns:
-
-    - ``n_base`` / ``n_delta`` / ``n_total``: list sizes;
-    - ``frac_delta``: how much of the list arrived after the build
-      (a uniformly growing index drifts everywhere a little; one
-      cluster absorbing most of the delta means the frozen quantizer
-      no longer describes the incoming distribution);
-    - ``imbalance``: n_total / mean(n_total) — probe cost skew: a
-      search probing an imbalanced cluster scans that many times the
-      average list.
-
-    Cost: two column-pruned scans (cluster column only) + one tiny
-    groupBy — safe to run on a schedule against a 100 TB index.
-
-    r11: the per-list core is the shared ``pq.index_list_stats``
-    (which also handles the IVF-PQ codes layout); this report layers
-    the two derived drift columns on top. Complementary to the
-    assignment-DISTANCE drift monitor below: skew says where probe
-    cost is going, distance says whether the quantizer still fits.
-    """
-    from ..operators.pq import index_list_stats
-
-    per = index_list_stats(spark, index_path).withColumn(
-        "frac_delta",
-        F.when(F.col("n_total") > 0, F.col("n_delta") / F.col("n_total")).otherwise(
-            F.lit(0.0)
-        ),
-    )
-    mean_total = F.broadcast(per.agg(F.avg("n_total").alias("__mean")))
-    return (
-        per.join(mean_total)
-        .withColumn(
-            "imbalance",
-            F.when(
-                F.col("__mean") > 0, F.col("n_total") / F.col("__mean")
-            ).otherwise(F.lit(0.0)),
-        )
-        .drop("__mean")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Quantizer drift monitor (r11) — the plain-IVF sibling of
-# ivfpq_ingest's: one mergeable row per appended batch holding the
-# exact sum of squared distances from each vector to its frozen home
-# centroid. The module doc above names the frozen-quantizer drift
-# tradeoff; these functions measure it. No reconstruction-error term
-# here — the flat index stores exact vectors, so the only drifting
-# quantity is coarse-assignment fit (list skew / falling recall at
-# fixed nprobe). Rows merge by pure sum; ratios compare against a
-# recorded build-corpus baseline.
-# ---------------------------------------------------------------------------
-
-
-def _ivf_drift_sums() -> list:
-    return [
-        F.sum("n").alias("n"),
-        F.sum("sum_assign_d").alias("sum_assign_d"),
-    ]
 
 
 def _ivf_drift_row(assigned: DataFrame, cents: DataFrame) -> DataFrame:
@@ -338,80 +177,9 @@ def drift_baseline(spark: SparkSession, index_path: str) -> None:
     comparison base, from the index's persisted ``lists`` dataset (the
     raw corpus is never rescanned). Run once after ``ivf_build_index``
     or a retrain — after a retrain, ``reset_drift`` FIRST (old rows
-    measured under the old quantizer poison the new ratios; see
-    ivfpq_ingest.drift_baseline's retrain contract)."""
+    measured under the old quantizer poison the new ratios)."""
     cents = spark.read.parquet(f"{index_path}/centroids")
     lists = spark.read.parquet(f"{index_path}/lists")
     _ivf_drift_row(lists, cents).write.mode("overwrite").parquet(
         f"{index_path}/drift_base"
     )
-
-
-def read_drift_trend(spark: SparkSession, index_path: str) -> DataFrame | None:
-    """Per-batch (__batch, n, mean_assign_d, assign_ratio) against the
-    recorded baseline; None until a drift row exists. Ratio ~1.0 = the
-    stream matches the build corpus; sustained growth = schedule an
-    offline ``ivf_build_index`` retrain + ``drift_baseline``."""
-    live = log_live(spark, f"{index_path}/drift")
-    if live is None:
-        return None
-    base = spark.read.parquet(f"{index_path}/drift_base").select(
-        (F.col("sum_assign_d") / F.col("n")).cast("double").alias("__bad")
-    )
-    per = live.groupBy(BATCH_COL).agg(*_ivf_drift_sums())
-    return per.crossJoin(F.broadcast(base)).select(
-        BATCH_COL,
-        "n",
-        (F.col("sum_assign_d") / F.col("n")).cast("double").alias("mean_assign_d"),
-        (F.col("sum_assign_d") / F.col("n") / F.col("__bad"))
-        .cast("double")
-        .alias("assign_ratio"),
-    )
-
-
-def drift_signal(
-    spark: SparkSession, index_path: str, retrain_ratio: float = 1.5
-) -> DataFrame | None:
-    """One row over ALL appended-so-far vectors: (n, assign_ratio,
-    retrain). Pure merge of the mergeable rows — cost independent of
-    appended volume. See ivfpq_ingest.drift_signal for the threshold
-    semantics."""
-    live = log_live(spark, f"{index_path}/drift")
-    if live is None:
-        return None
-    base = spark.read.parquet(f"{index_path}/drift_base").select(
-        (F.col("sum_assign_d") / F.col("n")).cast("double").alias("__bad")
-    )
-    out = live.agg(*_ivf_drift_sums()).crossJoin(F.broadcast(base)).select(
-        "n",
-        (F.col("sum_assign_d") / F.col("n") / F.col("__bad"))
-        .cast("double")
-        .alias("assign_ratio"),
-    )
-    return out.select(
-        "*", (F.col("assign_ratio") > F.lit(retrain_ratio)).alias("retrain")
-    )
-
-
-def compact_drift(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold old drift rows by pure sum (see ivfpq_ingest.compact_drift)."""
-    return compact_log(
-        spark,
-        f"{index_path}/drift",
-        up_to_batch,
-        lambda live: live.agg(*_ivf_drift_sums()),
-    )
-
-
-def reset_drift(spark: SparkSession, index_path: str) -> None:
-    """Drop the drift log and baseline before a retrain's new
-    ``drift_baseline`` (see ivfpq_ingest.reset_drift)."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(index_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    for sub in ("drift", "drift_base"):
-        p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/{sub}")
-        if fs.exists(p) and not fs.delete(p, True):
-            raise RuntimeError(f"could not remove {index_path}/{sub}")
-    invalidate_watermark_cache(f"{index_path}/drift")

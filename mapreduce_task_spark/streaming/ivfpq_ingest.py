@@ -1,53 +1,26 @@
 """Streaming IVF-PQ index maintenance: keep the compressed (codes +
-refine vectors) ANN index fresh as embeddings stream in, without
-rebuilding or retraining per batch.
+refine vectors) ANN index (``operators/pq.py:ivfpq_build_index``) fresh
+as embeddings stream in, without rebuilding or retraining per batch.
 
-The plain-IVF twin (``ivf_ingest.py``) appends assigned vectors under
-a frozen quantizer; this module does the same for the IVF-PQ index
-(``operators/pq.py:ivfpq_build_index``), whose at-rest artifacts are
-the coarse quantizer, the residual codebook, cluster-partitioned
-m-code inverted lists, AND (r10) the cluster-partitioned original
-vectors the exact-rerank refine stage reads:
+The delta protocol — append, compaction, segment merge, drift monitor —
+is the one shared by every ANN family, in ``ann_delta.py``; this module
+supplies the IVF-PQ codec pieces:
 
-- Each micro-batch is encoded against the FROZEN coarse quantizer +
-  residual codebook (``ivfpq_encode_batch`` — one shuffle-free
-  broadcast projection; no Lloyd rounds anywhere on the hot path) and
-  appended to ``<index>/delta``, partitioned by (``__batch``,
-  cluster). One delta log carries both payloads per row — the m codes
-  for ADC and (qv, nq) for refine — so codes and vectors can never
-  drift apart across a crash. Replays are idempotent: the encoding is
-  deterministic in (frozen index, batch rows), so a crash-replayed
-  batch dynamically overwrites exactly its own partition tree with
-  identical rows (the ``batchlog`` protocol).
+- ``append_batch`` encodes each batch against the FROZEN coarse
+  quantizer + residual codebook (``ivfpq_encode_batch`` — one
+  shuffle-free broadcast projection). One delta row carries both
+  payloads — the m codes for ADC and (qv, nq) for refine — so codes
+  and vectors can never drift apart across a crash, and a merge
+  rewrites both base datasets (``codes``, ``vectors``).
 - ``search_with_delta`` ADC-scores base lists and the delta live view
-  through their own broadcast-probe joins (partition pruning holds on
-  both sides independently), merges candidates before the top-k
-  window, and with ``refine=N`` exact-reranks the merged shortlist
-  against base ∪ delta vectors — results identical to a full
-  same-quantizer-same-codebook re-encode over base ∪ appended
-  (asserted in tests via merge-then-search equality).
-- ``compact_delta`` folds committed batch partitions into the
-  negative-id partition (bounded file/partition counts).
-- ``merge_delta_into_base`` is the offline segment merge: rewrite
-  codes = codes ∪ delta codes and vectors = vectors ∪ delta vectors
-  (each through a side directory + rename, never through memory),
-  then drop the delta. After a merge, an offline
-  ``ivfpq_build_index`` retrain can be scheduled if quantizer/codebook
-  drift has grown — the same drift tradeoff every frozen-quantizer
-  append design carries (see ivf_ingest's module doc; PQ adds
-  codebook drift: residuals of drifted data quantize worse, which
-  shows up as falling refined-vs-unrefined recall gap, not wrong
-  results — the refine stage scores exact distances regardless).
-  Since r11 that failure mode is MEASURED, not just named: every
-  appended batch lands a mergeable drift row (assignment distance +
-  PQ reconstruction error), ``drift_baseline`` records the build
-  corpus's own numbers, and ``drift_signal`` turns the ratio into a
-  documented retrain trigger.
-
-At 100 TB: per-batch cost is O(batch) map-only work; searches stay
-partition-pruned on base and delta; merges stream through parquet
-writes. Cite: reference has no streaming surface — this extends the
-LLM-pipeline extension set (SURVEY.md §2 extensions).
+  through their own broadcast-probe joins, merges candidates before
+  the top-k window, and with ``refine=N`` exact-reranks the merged
+  shortlist against base ∪ delta vectors — identical to
+  ``ivfpq_search_index`` after a merge (asserted in tests).
+- the drift row adds PQ reconstruction error (``sum_quant_err``) to the
+  assignment distance: residuals of drifted data quantize worse, which
+  shows up as a falling refined-vs-unrefined recall gap, not wrong
+  results.
 """
 
 from __future__ import annotations
@@ -63,14 +36,16 @@ from ..operators.pq import (
     ivfpq_encode_batch,
 )
 from ..operators.similarity import probe_clusters, with_quantized
-from .batchlog import (
-    BATCH_COL,
-    compact_log,
-    invalidate_watermark_cache,
-    log_live,
-    merge_log_into_base,
-    write_batch_partition,
+from .ann_delta import allowed_only, index_logs, land_batch
+from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
+    compact_delta,
+    compact_drift,
+    drift_signal,
+    merge_delta_into_base,
+    read_drift_trend,
+    reset_drift,
 )
+from .batchlog import attach_batch_sink, log_live
 
 
 def append_batch(
@@ -88,16 +63,15 @@ def append_batch(
 ) -> None:
     """Encode one (micro-)batch against the index's frozen coarse
     quantizer + residual codebook and land it in the delta log's own
-    batch partition, sub-partitioned by cluster (same physical shape
-    as the base lists, so searches prune identically). ``m``/``dim``/
+    batch partition, sub-partitioned by cluster. ``m``/``dim``/
     ``per_list``/``metric`` must match the build (same plan-time
     contract as ``ivfpq_search_index``; metric is validated against
     the persisted meta — appending un-normalized rows to a cosine
     index would silently corrupt every ranking the delta touches).
 
     ``drift=True`` (default) also lands one mergeable drift-monitor
-    row for the batch (see the drift section below) — one extra
-    map-only pass + 1-row aggregate over the micro-batch, the price of
+    row for the batch — one extra map-only pass + 1-row aggregate over
+    the micro-batch, the price of
     a frozen-quantizer design NOT degrading silently. The drift row is
     written even when the delta write is a merged-watermark replay
     skip: the batch's vectors are part of the appended-since-build
@@ -113,15 +87,12 @@ def append_batch(
         batch_df, coarse, cents, id_col, vec_col, m=m, dim=dim,
         per_list=per_list, metric=metric, prequantized=prequantized,
     )
-    write_batch_partition(
-        rows, batch_id, f"{index_path}/delta", sub_partition_cols=("cluster",)
+    land_batch(
+        "ivfpq", index_path, batch_id, rows,
+        {"drift": _drift_stats_row(rows, coarse, cents, m, dim // m, per_list)}
+        if drift
+        else {},
     )
-    if drift:
-        write_batch_partition(
-            _drift_stats_row(rows, coarse, cents, m, dim // m, per_list),
-            batch_id,
-            f"{index_path}/drift",
-        )
 
 
 def streaming_ivfpq_append(
@@ -138,27 +109,15 @@ def streaming_ivfpq_append(
 ):
     """Attach the append sink to an embedding stream; returns the
     StreamingQuery. The index (``ivfpq_build_index``) must exist."""
-    invalidate_watermark_cache(f"{index_path}/delta")
-    invalidate_watermark_cache(f"{index_path}/drift")
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_batch(
-            batch_df, batch_id, index_path, id_col, vec_col,
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        lambda df, bid: append_batch(
+            df, bid, index_path, id_col, vec_col,
             m=m, dim=dim, per_list=per_list, metric=metric, drift=drift,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        index_logs("ivfpq", index_path),
     )
-
-
-def _delta_live(spark: SparkSession, index_path: str) -> DataFrame | None:
-    return log_live(spark, f"{index_path}/delta")
 
 
 def search_with_delta(
@@ -214,27 +173,18 @@ def search_with_delta(
             F.zip_with("qv", "cqv", lambda a, b: a - b).alias("qv"),
         )
     )
-    allowed = (
-        None
-        if filter_ids is None
-        else filter_ids.select(F.col(id_col).alias("cand_id"))
-    )
-    base_cand = spark.read.parquet(f"{index_path}/codes").select(
-        F.col(id_col).alias("cand_id"), "cluster", "codes"
-    )
-    if allowed is not None:
-        base_cand = base_cand.join(allowed, "cand_id", "leftsemi")
-    scored = _ivfpq_adc_scored(base_cand, rq, cents, m, dsub, per_list=per_list)
-    delta = _delta_live(spark, index_path)
+
+    def scored(lists: DataFrame) -> DataFrame:
+        cand = lists.select(F.col(id_col).alias("cand_id"), "cluster", "codes")
+        return _ivfpq_adc_scored(
+            allowed_only(cand, filter_ids, id_col), rq, cents, m, dsub,
+            per_list=per_list,
+        )
+
+    cand_scored = scored(spark.read.parquet(f"{index_path}/codes"))
+    delta = log_live(spark, f"{index_path}/delta")
     if delta is not None:
-        delta_cand = delta.select(
-            F.col(id_col).alias("cand_id"), "cluster", "codes"
-        )
-        if allowed is not None:
-            delta_cand = delta_cand.join(allowed, "cand_id", "leftsemi")
-        scored = scored.unionByName(
-            _ivfpq_adc_scored(delta_cand, rq, cents, m, dsub, per_list=per_list)
-        )
+        cand_scored = cand_scored.unionByName(scored(delta))
     if refine:
         cvecs = _vectors_as_cvecs(
             spark.read.parquet(f"{index_path}/vectors"), id_col
@@ -243,85 +193,8 @@ def search_with_delta(
             cvecs = cvecs.unionByName(
                 _vectors_as_cvecs(delta.select(id_col, "cluster", "qv", "nq"), id_col)
             )
-        return _refine_stage(scored, qd, cvecs, id_col, k, refine)
-    return _rank_topk_by_distance(scored, k).drop("cluster")
-
-
-def compact_delta(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold delta partitions ``__batch <= up_to_batch`` into the
-    negative-id partition (rows are immutable encoded vectors — the
-    fold re-selects them; the win is bounded partition/file counts).
-    Append-only state never read back by the sink body, so
-    ``up_to_batch`` need not be checkpoint-committed (see
-    ivf_ingest.compact_delta)."""
-    return compact_log(
-        spark,
-        f"{index_path}/delta",
-        up_to_batch,
-        lambda live: live.drop(BATCH_COL),
-        sub_partition_cols=("cluster",),
-    )
-
-
-def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
-    """Rewrite the base ``codes`` AND ``vectors`` datasets as
-    base ∪ delta live view and drop the merged delta partitions — the
-    offline segment merge, on the shared marker-committed protocol
-    (``batchlog.merge_log_into_base``). The marker commit is what
-    makes a TWO-dataset base safe: after a crash anywhere past it,
-    recovery finishes both swaps from the recorded state, so codes and
-    vectors can never end half-swapped (a half-swap would silently
-    drop refine candidates at the (cluster, cand_id) join) and a
-    committed merge's rows can never be lost to a stale-base re-merge
-    even if the append stream was restarted first. Returns the number
-    of delta rows merged in (0 on a no-op or resume call)."""
-
-    def write_merged(live: DataFrame, name: str) -> None:
-        # each base dataset holds its own column subset of the delta
-        # rows ((id, codes) vs (id, qv, nq), cluster-partitioned) —
-        # align before the union
-        base = spark.read.parquet(f"{index_path}/{name}")
-        base.unionByName(live.select(*base.columns)).write.mode(
-            "overwrite"
-        ).partitionBy("cluster").parquet(f"{index_path}/{name}_merged")
-
-    return merge_log_into_base(
-        spark, index_path, "delta", ["codes", "vectors"], write_merged
-    )
-
-
-# ---------------------------------------------------------------------------
-# Quantizer/codebook drift monitor
-#
-# A frozen-quantizer append design degrades SILENTLY as the data
-# distribution moves away from what the quantizer was trained on:
-# results stay exactly-correct per the ADC/refine contracts, but
-# recall falls because residuals quantize worse and vectors land in
-# less discriminating lists. The module doc above names the failure
-# mode; these functions make it OBSERVABLE, per the quality_monitor
-# pattern: one tiny mergeable row per appended batch, a recorded
-# baseline from the build-time corpus, and a documented retrain signal
-# (the ratio of delta means to base means).
-#
-# Two signals per row, both exact int64-per-row sums (decimal(38,0)
-# across rows so a 100 TB corpus's sums cannot overflow):
-#   sum_assign_d:  sum ||v - centroid(home)||^2 — coarse-quantizer fit.
-#   sum_quant_err: sum ||residual - decode(codes)||^2 — codebook fit
-#                  (the PQ reconstruction error ADC rankings degrade
-#                  with).
-# Ratios near 1.0 mean the stream still looks like the build corpus;
-# sustained growth means falling recall at equal nprobe/refine — the
-# retrain trigger. Rows merge by pure sum (compact_drift), so any time
-# range re-aggregates without rescanning vectors.
-# ---------------------------------------------------------------------------
-
-def _drift_sums() -> list:
-    # built per call: classic-mode Column creation needs a live session
-    return [
-        F.sum("n").alias("n"),
-        F.sum("sum_assign_d").alias("sum_assign_d"),
-        F.sum("sum_quant_err").alias("sum_quant_err"),
-    ]
+        return _refine_stage(cand_scored, qd, cvecs, id_col, k, refine)
+    return _rank_topk_by_distance(cand_scored, k).drop("cluster")
 
 
 def _drift_stats_row(
@@ -333,7 +206,11 @@ def _drift_stats_row(
     per_list: bool = False,
 ) -> DataFrame:
     """One mergeable drift row over encoded (cluster, qv, nq, codes)
-    rows: (n, sum_assign_d, sum_quant_err). Map-only against the two
+    rows: (n, sum_assign_d, sum_quant_err) — exact int64 per row,
+    decimal(38,0) across rows. ``sum_assign_d`` sums ||v -
+    centroid(home)||^2 (coarse-quantizer fit), ``sum_quant_err`` sums
+    ||residual - decode(codes)||^2 (codebook fit, the PQ
+    reconstruction error ADC rankings degrade with). Map-only against the two
     broadcast tables the encode already used, then a 1-row aggregate —
     O(batch) work, nothing new touches the base index."""
     from ..operators.pq import _sub_dist
@@ -413,118 +290,3 @@ def drift_baseline(
     _drift_stats_row(encoded, coarse, cents, m, dim // m, per_list).write.mode(
         "overwrite"
     ).parquet(f"{index_path}/drift_base")
-
-
-def read_drift_trend(spark: SparkSession, index_path: str) -> DataFrame | None:
-    """Per-batch drift trend: (__batch, n, mean_assign_d,
-    mean_quant_err, assign_ratio, quant_ratio), ratios against the
-    recorded baseline means. None until a drift row exists. The
-    numbers to watch are the ratios: ~1.0 = the stream matches the
-    build corpus; sustained growth = the frozen quantizer/codebook no
-    longer fit the data and recall is silently degrading — schedule
-    ``ivfpq_build_index`` + ``drift_baseline`` (retrain)."""
-    live = log_live(spark, f"{index_path}/drift")
-    if live is None:
-        return None
-    base = (
-        spark.read.parquet(f"{index_path}/drift_base")
-        .select(
-            (F.col("sum_assign_d") / F.col("n")).cast("double").alias("__bad"),
-            (F.col("sum_quant_err") / F.col("n")).cast("double").alias("__bqe"),
-        )
-    )
-    per = live.groupBy(BATCH_COL).agg(*_drift_sums())
-    return per.crossJoin(F.broadcast(base)).select(
-        BATCH_COL,
-        "n",
-        (F.col("sum_assign_d") / F.col("n")).cast("double").alias("mean_assign_d"),
-        (F.col("sum_quant_err") / F.col("n")).cast("double").alias("mean_quant_err"),
-        (F.col("sum_assign_d") / F.col("n") / F.col("__bad"))
-        .cast("double")
-        .alias("assign_ratio"),
-        (F.col("sum_quant_err") / F.col("n") / F.col("__bqe"))
-        .cast("double")
-        .alias("quant_ratio"),
-    )
-
-
-def drift_signal(
-    spark: SparkSession, index_path: str, retrain_ratio: float = 1.5
-) -> DataFrame | None:
-    """The retrain trigger, as one row over ALL appended-so-far rows:
-    (n, assign_ratio, quant_ratio, retrain). ``retrain`` is true when
-    either ratio exceeds ``retrain_ratio`` — i.e. the streamed data's
-    mean coarse-assignment distance or PQ reconstruction error has
-    grown that much past the build corpus's own. 1.5 is a conservative
-    default (50% more reconstruction error than trained-on data);
-    tighten for recall-critical serving. None until a drift row
-    exists. Pure merge of the mergeable rows — cost is independent of
-    how much data was appended.
-
-    CALIBRATION CAVEAT (measured r11): with ``per_list=True``
-    codebooks the baseline reconstruction error is OVER-FIT — ksub
-    centroids per small inverted list nearly memorize the build
-    corpus — so even in-distribution appends read quant ratios of
-    ~2-3x (2.68 on the test fixture, arithmetic verified exactly).
-    For per-list indexes set ``retrain_ratio`` relative to the ratio
-    an in-distribution holdout batch reads, not to 1.0; the
-    assignment-distance ratio has no codebook to over-fit and stays
-    near 1 either way."""
-    live = log_live(spark, f"{index_path}/drift")
-    if live is None:
-        return None
-    base = (
-        spark.read.parquet(f"{index_path}/drift_base")
-        .select(
-            (F.col("sum_assign_d") / F.col("n")).cast("double").alias("__bad"),
-            (F.col("sum_quant_err") / F.col("n")).cast("double").alias("__bqe"),
-        )
-    )
-    total = live.agg(*_drift_sums())
-    out = total.crossJoin(F.broadcast(base)).select(
-        "n",
-        (F.col("sum_assign_d") / F.col("n") / F.col("__bad"))
-        .cast("double")
-        .alias("assign_ratio"),
-        (F.col("sum_quant_err") / F.col("n") / F.col("__bqe"))
-        .cast("double")
-        .alias("quant_ratio"),
-    )
-    return out.select(
-        "*",
-        (
-            (F.col("assign_ratio") > F.lit(retrain_ratio))
-            | (F.col("quant_ratio") > F.lit(retrain_ratio))
-        ).alias("retrain"),
-    )
-
-
-def compact_drift(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold old drift rows into the negative-id partition by pure sum
-    — the per-batch trend for folded batches collapses into one
-    merged row, the overall ``drift_signal`` is unchanged (sums are
-    associative). Same sketch-store-grade contract as the other
-    monitor logs: never read back by a sink body, so ``up_to_batch``
-    need not be checkpoint-committed."""
-    return compact_log(
-        spark,
-        f"{index_path}/drift",
-        up_to_batch,
-        lambda live: live.agg(*_drift_sums()),
-    )
-
-
-def reset_drift(spark: SparkSession, index_path: str) -> None:
-    """Drop the drift log and baseline entirely — REQUIRED before a
-    retrain's new ``drift_baseline`` (see its retrain contract: rows
-    measured against the old quantizer poison ratios against the new
-    one). Loud on a failed delete like every protocol step."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(index_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    for sub in ("drift", "drift_base"):
-        p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/{sub}")
-        if fs.exists(p) and not fs.delete(p, True):
-            raise RuntimeError(f"could not remove {index_path}/{sub}")
-    invalidate_watermark_cache(f"{index_path}/drift")

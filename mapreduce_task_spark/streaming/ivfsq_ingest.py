@@ -1,28 +1,25 @@
-"""Streaming IVF-SQ index maintenance: the append-log pattern
-(ivf/ivfpq/bm25/sq_ingest) applied to the probe-bounded compressed
-index (``operators.sq.ivfsq_*``) — completing the delta-freshness
-matrix across every persisted index family.
+"""Streaming IVF-SQ index maintenance: keep the probe-bounded
+compressed index (``operators.sq.ivfsq_*``) fresh as embeddings stream
+in, without rebuilding.
 
-TWO frozen quantizers govern an append here, and BOTH monitors land
-per batch:
+The delta protocol — append, compaction, segment merge, both monitor
+sets — is the one shared by every ANN family, in ``ann_delta.py``;
+this module supplies the IVF-SQ codec pieces. TWO frozen quantizers
+govern an append here, and each has its monitor:
 
-- the coarse k-means centroids (frozen, like ivf_ingest) — each batch
-  is assigned by one broadcast argmin and the standard
-  assignment-distance DRIFT row lands (the ivf_ingest machinery is
-  reused verbatim: ``drift``/``drift_base`` logs, trend/signal/
-  compact/reset all operate on this index's path);
-- the SQ bounds (frozen, 1-row global or k-row per-list) — each batch
-  encodes map-only against them and the SATURATION row counts clamped
-  components (the sq_ingest machinery reused verbatim on the ``sat``
-  log; per-list bounds clamp per list, the join handles it).
+- the coarse k-means centroids (as in ``ivf_ingest``): each batch is
+  assigned by one broadcast argmin and lands the assignment-distance
+  ``drift`` row (``ivf_ingest._ivf_drift_row``);
+- the SQ bounds (1-row global or k-row per-list): each batch encodes
+  map-only against them and lands the ``sat`` clamp-count row
+  (``sq_ingest._sat_row_from_joined``; per-list bounds join on
+  cluster).
 
-Delta rows are (id, cluster, codes[, qv, nq]) in the delta log's own
-batch partition sub-partitioned by cluster — the same physical shape
-as the base code lists, so ``search_with_delta`` probes BOTH sides
-with partition pruning and merges scored candidates before the one
-top-k window (the shared ``_ivfsq_score`` tail — results are
-bit-for-bit what ``ivfsq_search_index`` returns after
-``merge_delta_into_base``, asserted in tests).
+Delta rows are (id, cluster, codes[, qv, nq]), sub-partitioned by
+cluster like the base code lists, so ``search_with_delta`` probes both
+sides with partition pruning and merges scored candidates before the
+one top-k window (the shared ``_ivfsq_score`` tail) — bit-for-bit what
+``ivfsq_search_index`` returns after ``merge_delta_into_base``.
 """
 
 from __future__ import annotations
@@ -31,33 +28,22 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.similarity import assign_clusters, probe_clusters, with_quantized
 from ..operators.sq import _assert_dim, _codes_expr
-from .batchlog import (
-    compact_log,
-    invalidate_watermark_cache,
-    log_live,
-    merge_log_into_base,
-    write_batch_partition,
-)
-from .ivf_ingest import (  # noqa: F401 — drift monitors reused verbatim
-    _ivf_drift_row,
+from .ann_delta import allowed_only, index_logs, index_meta, land_batch
+from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
+    compact_delta,
     compact_drift,
-    drift_signal,
-    read_drift_trend,
-    reset_drift,
-)
-from .sq_ingest import (  # noqa: F401 — saturation monitors reused verbatim
-    _sat_row_from_joined,
     compact_saturation,
+    drift_signal,
+    merge_delta_into_base,
+    read_drift_trend,
     read_saturation_trend,
+    reset_drift,
     reset_saturation,
     saturation_signal,
 )
-
-
-def _meta(spark: SparkSession, index_path: str) -> dict:
-    from ..operators.pq import read_index_meta
-
-    return read_index_meta(spark, index_path) or {}
+from .batchlog import attach_batch_sink, log_live
+from .ivf_ingest import _ivf_drift_row
+from .sq_ingest import _sat_row_from_joined
 
 
 def append_batch(
@@ -76,7 +62,7 @@ def append_batch(
     bounds-saturation row — two extra map-only passes + 1-row
     aggregates, replay-idempotent like the delta write."""
     spark = batch_df.sparkSession
-    meta = _meta(spark, index_path)
+    meta = index_meta(spark, index_path)
     kind = meta.get("kind", "ivfsq")
     if kind != "ivfsq":
         raise ValueError(
@@ -112,16 +98,15 @@ def append_batch(
         )
     else:
         rows = joined.select(id_col, "cluster", _codes_expr().alias("codes"))
-    write_batch_partition(
-        rows, batch_id, f"{index_path}/delta", sub_partition_cols=("cluster",)
+    land_batch(
+        "ivfsq", index_path, batch_id, rows,
+        {
+            "drift": _ivf_drift_row(assigned, cents),
+            "sat": _sat_row_from_joined(joined),
+        }
+        if monitors
+        else {},
     )
-    if monitors:
-        write_batch_partition(
-            _ivf_drift_row(assigned, cents), batch_id, f"{index_path}/drift"
-        )
-        write_batch_partition(
-            _sat_row_from_joined(joined), batch_id, f"{index_path}/sat"
-        )
 
 
 def streaming_ivfsq_append(
@@ -133,20 +118,11 @@ def streaming_ivfsq_append(
 ):
     """Attach the append sink to an embedding stream; returns the
     StreamingQuery. The index (``ivfsq_build_index``) must exist."""
-
-    for log in ("delta", "drift", "sat"):
-        invalidate_watermark_cache(f"{index_path}/{log}")
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_batch(batch_df, batch_id, index_path, id_col, vec_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        lambda df, bid: append_batch(df, bid, index_path, id_col, vec_col),
+        index_logs("ivfsq", index_path),
     )
 
 
@@ -175,23 +151,15 @@ def search_with_delta(
     from ..operators.sq import _ivfsq_score
 
     check_index_meta(spark, index_path, metric=metric, dim=dim, kind="ivfsq")
-    meta = _meta(spark, index_path)
+    meta = index_meta(spark, index_path)
     per_list = bool(meta.get("per_list", False))
     cents = spark.read.parquet(f"{index_path}/centroids")
     bounds = spark.read.parquet(f"{index_path}/bounds")
     delta = log_live(spark, f"{index_path}/delta")
 
-    allowed = (
-        None
-        if filter_ids is None
-        else filter_ids.select(F.col(id_col).alias("cand_id"))
-    )
-
     def side(df: DataFrame) -> DataFrame:
         c = df.select(F.col(id_col).alias("cand_id"), "cluster", "codes")
-        if allowed is not None:
-            c = c.join(allowed, "cand_id", "leftsemi")
-        return c
+        return allowed_only(c, filter_ids, id_col)
 
     sides = [side(spark.read.parquet(f"{index_path}/codes"))]
     if delta is not None:
@@ -238,47 +206,13 @@ def search_with_delta(
     )
 
 
-def compact_delta(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold delta partitions into the negative-id partition, keeping
-    the cluster sub-partitioning (see ivf_ingest.compact_delta for the
-    watermark argument)."""
-    from .batchlog import BATCH_COL
-
-    return compact_log(
-        spark,
-        f"{index_path}/delta",
-        up_to_batch,
-        lambda live: live.drop(BATCH_COL),
-        sub_partition_cols=("cluster",),
-    )
-
-
-def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
-    """Rewrite base codes (and vectors, when stored) as base ∪ delta
-    live view and drop the merged delta — the offline segment merge on
-    the shared marker-committed protocol. Centroids AND bounds stay
-    frozen (a merge is not a retrain/refit)."""
-    meta = _meta(spark, index_path)
-    targets = ["codes"] + (
-        ["vectors"] if meta.get("store_vectors", True) else []
-    )
-
-    def write_merged(live: DataFrame, name: str) -> None:
-        base = spark.read.parquet(f"{index_path}/{name}")
-        base.unionByName(live.select(*base.columns)).write.mode(
-            "overwrite"
-        ).partitionBy("cluster").parquet(f"{index_path}/{name}_merged")
-
-    return merge_log_into_base(spark, index_path, "delta", targets, write_merged)
-
-
 def drift_baseline(spark: SparkSession, index_path: str) -> None:
     """Record the build corpus's own mean assignment distance from the
     index's persisted ``vectors`` dataset (requires a
     ``store_vectors=True`` build — the codes alone cannot reproduce
     exact distances). Run once after ``ivfsq_build_index`` or a
     retrain (``reset_drift`` first, see ivf_ingest)."""
-    meta = _meta(spark, index_path)
+    meta = index_meta(spark, index_path)
     if not meta.get("store_vectors", True):
         raise ValueError(
             f"IVF-SQ index at {index_path} was built store_vectors=False — "

@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.textstats import ws_token_count
 from .batchlog import (
+    attach_batch_sink,
     compact_log,
-    invalidate_watermark_cache,
     log_live,
     write_batch_partition,
 )
@@ -78,20 +78,13 @@ def streaming_quality_monitor(
     """Attach the monitor sink to a document stream; returns the
     StreamingQuery. Composes with the ingest sinks (attach both to the
     same source) — this one observes, it never filters."""
-    invalidate_watermark_cache(path)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        write_batch_partition(
-            batch_quality_row(batch_df, id_col, text_col), batch_id, path
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        lambda df, bid: write_batch_partition(
+            batch_quality_row(df, id_col, text_col), bid, path
+        ),
+        [path],
     )
 
 

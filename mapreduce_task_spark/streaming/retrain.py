@@ -74,7 +74,23 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .batchlog import BATCH_COL, log_live
+from .ann_delta import (
+    FAMILIES,
+    Family,
+    drift_signal,
+    family_of,
+    index_logs,
+    index_meta,
+    meta_knobs,
+    saturation_signal,
+)
+from .batchlog import (
+    BATCH_COL,
+    drop_logs,
+    invalidate_watermark_cache,
+    log_exists,
+    log_live,
+)
 
 VERSIONS_DIR = "_versions"
 _MANIFEST_RE = re.compile(r"manifest-(\d+)\.json$")
@@ -177,27 +193,29 @@ def drop_old_versions(spark: SparkSession, root: str, keep: int = 1) -> list[str
         raise ValueError("keep must be >= 1")
     versions = list_versions(spark, root)
     live = {name for _, name in versions[-keep:]}
-    jvm, fs, _ = _fs(spark, root)
-    dropped = []
-    for _, name in versions[:-keep]:
-        if name in live:
-            continue
-        p = jvm.org.apache.hadoop.fs.Path(f"{root}/{name}")
-        if fs.exists(p):
-            if not fs.delete(p, True):
-                raise RuntimeError(f"could not remove {root}/{name}")
-            dropped.append(name)
-    return dropped
+    return drop_logs(
+        spark, root, [name for _, name in versions[:-keep] if name not in live]
+    )
 
 
 # ---------------------------------------------------------------------------
 # the rebuild itself
 
 
+def _rebuildable(meta: dict) -> tuple[str, Family]:
+    """(kind, family) of a kind retrain can rebuild; any other kind
+    (flat SQ8 has no coarse quantizer to retrain) is refused."""
+    kind, fam = family_of(meta)
+    if fam.corpus is None:
+        known = sorted(k for k, f in FAMILIES.items() if f.corpus)
+        raise ValueError(f"retrain supports kinds {known}, got {kind!r}")
+    return kind, fam
+
+
 def _corpus_and_carry(
     spark: SparkSession,
     cur: str,
-    kind: str,
+    fam: Family,
     meta: dict,
     id_col: str,
     committed_batch: int | None,
@@ -206,13 +224,12 @@ def _corpus_and_carry(
     rebuild from (base ∪ folded delta), and the delta rows past the
     committed watermark (with their ``__batch`` ids) to carry into the
     new version's delta — None when everything folds."""
-    base_name = "lists" if kind == "ivf" else "vectors"
-    if kind == "ivfsq" and not meta.get("store_vectors", True):
+    if fam.corpus not in fam.targets(meta):
         raise ValueError(
-            f"IVF-SQ index at {cur} was built store_vectors=False — codes "
+            f"index at {cur} was built store_vectors=False — codes "
             "alone cannot seed a retrain; rebuild with store_vectors=True"
         )
-    base = spark.read.parquet(f"{cur}/{base_name}").select(id_col, "qv", "nq")
+    base = spark.read.parquet(f"{cur}/{fam.corpus}").select(id_col, "qv", "nq")
     delta = log_live(spark, f"{cur}/delta")
     if delta is None:
         return base, None
@@ -232,60 +249,8 @@ def _corpus_and_carry(
     return base.unionByName(folded.select(id_col, "qv", "nq")), carry
 
 
-def _build_new(
-    corpus: DataFrame,
-    new_path: str,
-    kind: str,
-    meta: dict,
-    id_col: str,
-) -> None:
-    """Dispatch the family's own build over the prequantized corpus,
-    replaying hyperparameters from the old version's meta."""
-    metric = meta.get("metric", "l2")
-    if kind == "ivf":
-        from ..operators.similarity import ivf_build_index
-
-        ivf_build_index(
-            corpus, new_path, id_col=id_col,
-            n_clusters=meta.get("n_clusters", 8), dim=meta.get("dim", 64),
-            rounds=meta.get("rounds", 1), prequantized=True,
-        )
-    elif kind == "ivfpq":
-        from ..operators.pq import ivfpq_build_index
-
-        ivfpq_build_index(
-            corpus, new_path, id_col=id_col,
-            n_clusters=meta.get("n_clusters", 8), m=meta.get("m", 8),
-            ksub=meta.get("ksub", 16), dim=meta.get("dim", 64),
-            coarse_rounds=meta.get("coarse_rounds", 1),
-            pq_rounds=meta.get("pq_rounds", 2),
-            per_list=meta.get("per_list", False), metric=metric,
-            prequantized=True,
-        )
-    elif kind == "ivfsq":
-        from ..operators.sq import ivfsq_build_index
-
-        ivfsq_build_index(
-            corpus, new_path, id_col=id_col,
-            n_clusters=meta.get("n_clusters", 8), dim=meta.get("dim", 64),
-            rounds=meta.get("rounds", 1), metric=metric,
-            per_list=meta.get("per_list", False),
-            store_vectors=meta.get("store_vectors", True),
-            prequantized=True,
-        )
-    else:
-        raise ValueError(
-            f"retrain_index supports kinds ivf/ivfpq/ivfsq, got {kind!r}"
-        )
-
-
 def _carry_batches(
-    spark: SparkSession,
-    carry: DataFrame,
-    new_path: str,
-    kind: str,
-    meta: dict,
-    id_col: str,
+    carry: DataFrame, new_path: str, fam: Family, meta: dict, id_col: str
 ) -> list[int]:
     """Re-append each carried batch under the NEW frozen quantizer via
     the family's own append body — so a later stream replay of the
@@ -295,51 +260,14 @@ def _carry_batches(
         for r in carry.select(BATCH_COL).distinct().collect()
         if r[0] is not None and r[0] >= 0
     )
+    append = fam.ingest().append_batch
     for bid in ids:
         rows = carry.filter(F.col(BATCH_COL) == bid).select(id_col, "qv", "nq")
-        if kind == "ivf":
-            from .ivf_ingest import append_batch
-
-            append_batch(rows, bid, new_path, id_col=id_col, prequantized=True)
-        elif kind == "ivfpq":
-            from .ivfpq_ingest import append_batch
-
-            append_batch(
-                rows, bid, new_path, id_col=id_col, m=meta.get("m", 8),
-                dim=meta.get("dim", 64),
-                per_list=meta.get("per_list", False),
-                metric=meta.get("metric", "l2"), prequantized=True,
-            )
-        else:
-            from .ivfsq_ingest import append_batch
-
-            append_batch(rows, bid, new_path, id_col=id_col, prequantized=True)
-    return ids
-
-
-def _drift_baseline(
-    spark: SparkSession, path: str, kind: str, meta: dict, id_col: str
-) -> None:
-    """Fresh baseline on the new version — the IVF-PQ one needs the
-    index's own shape params (meta-sourced, NOT the signature
-    defaults: a per-list or non-64-dim index baselined under default
-    knobs would record silently wrong reconstruction errors — r13
-    self-review finding)."""
-    if kind == "ivf":
-        from .ivf_ingest import drift_baseline
-
-        drift_baseline(spark, path)
-    elif kind == "ivfpq":
-        from .ivfpq_ingest import drift_baseline
-
-        drift_baseline(
-            spark, path, id_col=id_col, m=meta.get("m", 8),
-            dim=meta.get("dim", 64), per_list=meta.get("per_list", False),
+        append(
+            rows, bid, new_path, prequantized=True,
+            **meta_knobs(fam.append_args, meta, id_col),
         )
-    else:
-        from .ivfsq_ingest import drift_baseline
-
-        drift_baseline(spark, path)
+    return ids
 
 
 def retrain_index(
@@ -360,9 +288,9 @@ def retrain_index(
     meta = read_index_meta(spark, cur)
     if meta is None:
         raise ValueError(f"index at {cur} has no meta — cannot retrain")
-    kind = meta.get("kind", "ivf")
+    kind, fam = _rebuildable(meta)
     corpus, carry = _corpus_and_carry(
-        spark, cur, kind, meta, id_col, committed_batch
+        spark, cur, fam, meta, id_col, committed_batch
     )
     new_epoch = old_epoch + 1
     new_name = f"v{new_epoch}"
@@ -372,24 +300,28 @@ def retrain_index(
     # delta partitions / monitor rows (measured under a DIFFERENT
     # quantizer) would survive the dataset-scoped overwrite-mode build
     # and double-count or poison the promoted version — clear first
-    jvm, fs, _ = _fs(spark, root)
-    stale = jvm.org.apache.hadoop.fs.Path(new_path)
-    if fs.exists(stale) and not fs.delete(stale, True):
-        raise RuntimeError(f"could not clear crashed-retrain leftover {new_path}")
-    from .batchlog import invalidate_watermark_cache
-
-    for log in ("delta", "drift", "sat"):
-        invalidate_watermark_cache(f"{new_path}/{log}")
-    _build_new(corpus, new_path, kind, meta, id_col)
+    drop_logs(spark, root, [new_name])
+    for log in index_logs(kind, new_path):
+        invalidate_watermark_cache(log)
+    # the family's own build, hyperparameters replayed from the old meta
+    fam.build(
+        corpus, new_path, prequantized=True,
+        **meta_knobs(fam.build_args, meta, id_col),
+    )
     carried = (
-        _carry_batches(spark, carry, new_path, kind, meta, id_col)
+        _carry_batches(carry, new_path, fam, meta, id_col)
         if carry is not None
         else []
     )
     # fresh baseline BEFORE promote: a reader of the new version must
     # never observe index-without-baseline (crawl_health would silently
-    # skip its drift columns)
-    _drift_baseline(spark, new_path, kind, meta, id_col)
+    # skip its drift columns). Its shape params come from the meta, NOT
+    # the signature defaults: a per-list or non-64-dim IVF-PQ index
+    # baselined under default knobs would record silently wrong
+    # reconstruction errors.
+    fam.ingest().drift_baseline(
+        spark, new_path, **meta_knobs(fam.baseline_args, meta, id_col)
+    )
     promote_version(spark, root, new_name, epoch=new_epoch)
     return {
         "kind": kind,
@@ -413,29 +345,18 @@ def retrain_if_due(
     Returns ``{due, retrain, refit, ...retrain_index result}``;
     ``due=False`` means no signal fired (or no monitor data exists
     yet) and nothing was touched."""
-    from .batchlog import log_exists
-
     cur = current_index_path(spark, root)
-    from ..operators.pq import read_index_meta
-
-    meta = read_index_meta(spark, cur) or {}
-    kind = meta.get("kind", "ivf")
-    if kind == "ivf":
-        from . import ivf_ingest as mod
-    elif kind == "ivfpq":
-        from . import ivfpq_ingest as mod
-    else:
-        from . import ivfsq_ingest as mod
+    _, fam = _rebuildable(index_meta(spark, cur))
     retrain = refit = False
     jvm, fs, _ = _fs(spark, cur)
     has_base = fs.exists(jvm.org.apache.hadoop.fs.Path(f"{cur}/drift_base"))
-    if log_exists(spark, f"{cur}/drift") and has_base:
-        sig = mod.drift_signal(spark, cur, retrain_ratio)
+    if "drift" in fam.monitors and log_exists(spark, f"{cur}/drift") and has_base:
+        sig = drift_signal(spark, cur, retrain_ratio)
         if sig is not None:
             row = sig.collect()[0]
             retrain = bool(row["retrain"])
-    if kind == "ivfsq" and log_exists(spark, f"{cur}/sat"):
-        sat = mod.saturation_signal(spark, cur, refit_frac)
+    if "sat" in fam.monitors and log_exists(spark, f"{cur}/sat"):
+        sat = saturation_signal(spark, cur, refit_frac)
         if sat is not None:
             refit = bool(sat.collect()[0]["refit"])
     out = {"due": retrain or refit, "retrain": retrain, "refit": refit}

@@ -40,10 +40,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .batchlog import (
     BATCH_COL,
+    attach_batch_sink,
     batch_ids as _batch_ids,
     compact_log,
     covered_watermark as _covered,
-    invalidate_watermark_cache,
     live_view as _live,
     write_batch_partition,
 )
@@ -101,18 +101,13 @@ def streaming_sketch_store(
     val_col: str,
 ):
     """Attach the sketch-store sink; returns the StreamingQuery."""
-    invalidate_watermark_cache(path)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        write_batch_sketches(batch_df, batch_id, path, group_col, key_col, val_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        lambda df, bid: write_batch_sketches(
+            df, bid, path, group_col, key_col, val_col
+        ),
+        [path],
     )
 
 

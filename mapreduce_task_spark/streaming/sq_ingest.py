@@ -1,37 +1,25 @@
 """Streaming flat-SQ8 index maintenance: keep a persisted SQ index
 (``operators.sq.sq_build_index``) fresh as embeddings stream in,
-without rebuilding — the ivf/ivfpq/bm25 append-log pattern applied to
-the one index family that had none (r11 verdict #3).
+without rebuilding.
 
-The quantizer here is the per-dimension (minq, maxq) BOUNDS frame, and
-it stays FROZEN across appends (exactly like the frozen centroids /
-codebooks of the IVF family): each micro-batch encodes against the
-build-time bounds in one map-only pass and lands in
-``<index>/delta``'s own batch partition, so replays dynamically
-overwrite exactly their own rows (deterministic in (frozen bounds,
-batch rows)). Search unions base codes with the delta log's live view
-before the one top-k window — bit-for-bit what ``sq_search_index``
-returns after ``merge_delta_into_base`` folds the delta in (asserted
-in tests; a full REBUILD would refit bounds and legitimately differ,
-the same way an IVF rebuild retrains centroids).
+The delta protocol — append, compaction, segment merge, saturation
+monitor — is the one shared by every ANN family, in ``ann_delta.py``;
+this module supplies the flat-SQ8 codec pieces. The quantizer is the
+per-dimension (minq, maxq) BOUNDS frame, FROZEN across appends:
 
-The frozen-bounds degradation is SATURATION, not drift: a new vector
-component outside [minq, maxq] clamps to the nearest end
-(``sq_encode``'s documented contract) — arithmetic stays exact, but
-the clamped component carries no distance information, so recall
-decays as the stream leaves the fitted range. ``sq_encode`` clamps
-SILENTLY; this module counts it: each appended batch lands one
-mergeable (n, n_components, n_clamped) row (exact decimal(38,0) sums,
-100 TB-safe merges), and ``saturation_signal`` exposes the refit
-trigger. Unlike assignment-distance drift there is no baseline to
-record — the build corpus saturates NOTHING by construction (bounds
-are its min/max), so the clamped fraction is directly comparable to
-zero and the threshold is absolute.
-
-Retrain contract: when ``saturation_signal`` trips, schedule an
-offline ``sq_build_index`` over base ∪ delta (fresh bounds), then
-``reset_saturation``. Cite: extension family (SURVEY §2.6); no
-reference analogue (the reference has no vector ops).
+- ``append_batch`` encodes each batch against the build-time bounds in
+  one map-only pass; the delta is flat (no clusters), and carries
+  (qv, nq) beside the codes when the index stores vectors, so refine
+  covers streamed-in rows too;
+- ``search_with_delta`` unions base codes with the delta live view
+  before the one top-k window — bit-for-bit what ``sq_search_index``
+  returns after ``merge_delta_into_base`` (a full REBUILD would refit
+  bounds and legitimately differ);
+- the frozen-bounds degradation is SATURATION, not drift: a component
+  outside [minq, maxq] clamps silently in ``sq_encode``, carrying no
+  distance information, and the ``sat`` row counts it. When
+  ``saturation_signal`` trips, rebuild over base ∪ delta (fresh
+  bounds), then ``reset_saturation``.
 """
 
 from __future__ import annotations
@@ -40,20 +28,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.similarity import with_quantized
 from ..operators.sq import _assert_dim, _codes_expr, _sq_flat_score
-from .batchlog import (
-    BATCH_COL,
-    compact_log,
-    invalidate_watermark_cache,
-    log_live,
-    merge_log_into_base,
-    write_batch_partition,
+from .ann_delta import allowed_only, index_logs, index_meta, land_batch
+from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
+    compact_delta,
+    compact_saturation,
+    merge_delta_into_base,
+    read_saturation_trend,
+    reset_saturation,
+    saturation_signal,
 )
-
-
-def _meta(spark: SparkSession, index_path: str) -> dict:
-    from ..operators.pq import read_index_meta
-
-    return read_index_meta(spark, index_path) or {}
+from .batchlog import attach_batch_sink, log_live
 
 
 def append_batch(
@@ -72,7 +56,7 @@ def append_batch(
     map-only pass + 1-row aggregate, replay-idempotent like the delta
     write itself."""
     spark = batch_df.sparkSession
-    meta = _meta(spark, index_path)
+    meta = index_meta(spark, index_path)
     kind = meta.get("kind", "sq8")
     if kind != "sq8":
         raise ValueError(
@@ -95,11 +79,12 @@ def append_batch(
         rows = joined.select(id_col, "qv", "nq", _codes_expr().alias("codes"))
     else:
         rows = joined.select(id_col, _codes_expr().alias("codes"))
-    write_batch_partition(rows, batch_id, f"{index_path}/delta")
-    if saturation:
-        write_batch_partition(
-            _saturation_row(qd, bounds), batch_id, f"{index_path}/sat"
-        )
+    land_batch(
+        "sq8", index_path, batch_id, rows,
+        {"sat": _sat_row_from_joined(qd.crossJoin(F.broadcast(bounds)))}
+        if saturation
+        else {},
+    )
 
 
 def streaming_sq_append(
@@ -111,20 +96,11 @@ def streaming_sq_append(
 ):
     """Attach the append sink to an embedding stream; returns the
     StreamingQuery. The index (``sq_build_index``) must exist."""
-
-    invalidate_watermark_cache(f"{index_path}/delta")
-    invalidate_watermark_cache(f"{index_path}/sat")
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_batch(batch_df, batch_id, index_path, id_col, vec_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        lambda df, bid: append_batch(df, bid, index_path, id_col, vec_col),
+        index_logs("sq8", index_path),
     )
 
 
@@ -151,7 +127,7 @@ def search_with_delta(
     from ..operators.pq import check_index_meta
 
     check_index_meta(spark, index_path, metric=metric, dim=dim, kind="sq8")
-    meta = _meta(spark, index_path)
+    meta = index_meta(spark, index_path)
     bounds = spark.read.parquet(f"{index_path}/bounds")
     cand = spark.read.parquet(f"{index_path}/codes").select(
         F.col(id_col).alias("cand_id"), "codes"
@@ -161,12 +137,7 @@ def search_with_delta(
         cand = cand.unionByName(
             delta.select(F.col(id_col).alias("cand_id"), "codes")
         )
-    if filter_ids is not None:
-        cand = cand.join(
-            filter_ids.select(F.col(id_col).alias("cand_id")),
-            "cand_id",
-            "leftsemi",
-        )
+    cand = allowed_only(cand, filter_ids, id_col)
     qd = with_quantized(queries, vec_col, metric=metric).select(
         id_col,
         _assert_dim(F.col("qv"), F.lit(dim), "sq_search_with_delta").alias(
@@ -190,69 +161,14 @@ def search_with_delta(
     return _sq_flat_score(qd, cand, bounds, id_col, k, refine, vectors)
 
 
-def compact_delta(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
-    """Fold delta partitions ``__batch <= up_to_batch`` into the
-    negative-id partition (rows are immutable encoded vectors — the
-    fold re-selects them; the win is a bounded partition/file count).
-    Append-only state never read back by the sink body, so
-    ``up_to_batch`` need not be checkpoint-committed (the ivf_ingest
-    argument)."""
-    return compact_log(
-        spark,
-        f"{index_path}/delta",
-        up_to_batch,
-        lambda live: live.drop(BATCH_COL),
-    )
-
-
-def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
-    """Rewrite base codes (and vectors, when stored) as base ∪ delta
-    live view and drop the merged delta partitions — the offline
-    segment merge on the shared marker-committed protocol
-    (``batchlog.merge_log_into_base``); crash recovery is a re-run.
-    Bounds stay frozen (a merge is not a refit); returns the number of
-    delta rows merged in (0 on a no-op or resume call)."""
-    meta = _meta(spark, index_path)
-    targets = ["codes"] + (
-        ["vectors"] if meta.get("store_vectors", True) else []
-    )
-
-    def write_merged(live: DataFrame, name: str) -> None:
-        base = spark.read.parquet(f"{index_path}/{name}")
-        base.unionByName(live.select(*base.columns)).write.mode(
-            "overwrite"
-        ).parquet(f"{index_path}/{name}_merged")
-
-    return merge_log_into_base(spark, index_path, "delta", targets, write_merged)
-
-
-# ---------------------------------------------------------------------------
-# Bounds-saturation monitor — the SQ analogue of quantizer drift.
-# ---------------------------------------------------------------------------
-
-
-def _sat_sums() -> list:
-    return [
-        F.sum("n").alias("n"),
-        F.sum("n_components").alias("n_components"),
-        F.sum("n_clamped").alias("n_clamped"),
-    ]
-
-
-def _saturation_row(qd: DataFrame, bounds: DataFrame) -> DataFrame:
-    """(n, n_components, n_clamped) over a quantized batch frame —
-    map-only against the broadcast bounds row, then one 1-row
+def _sat_row_from_joined(joined: DataFrame) -> DataFrame:
+    """The saturation row (n, n_components, n_clamped) over a frame
+    already carrying (qv, minq, maxq) — map-only, then one 1-row
     aggregate. A component clamps when it falls outside [minq, maxq]
     (for a degenerate minq == maxq dimension, any deviation from the
     constant counts — encode emits 0 and decode returns minq there).
-    decimal(38,0) sums so corpus-scale merges cannot overflow."""
-    return _sat_row_from_joined(qd.crossJoin(F.broadcast(bounds)))
-
-
-def _sat_row_from_joined(joined: DataFrame) -> DataFrame:
-    """The saturation aggregate over a frame already carrying
-    (qv, minq, maxq) — shared with ivfsq_ingest, whose per-list bounds
-    join on cluster instead of the flat index's 1-row crossJoin."""
+    Shared with ivfsq_ingest, whose per-list bounds join on cluster
+    instead of the flat index's 1-row crossJoin."""
     below = F.aggregate(
         F.zip_with("qv", "minq", lambda v, lo: (v < lo).cast("bigint")),
         F.lit(0).cast("bigint"),
@@ -275,70 +191,3 @@ def _sat_row_from_joined(joined: DataFrame) -> DataFrame:
             F.sum("__cl").alias("n_clamped"),
         )
     )
-
-
-def read_saturation_trend(
-    spark: SparkSession, index_path: str
-) -> DataFrame | None:
-    """Per-batch (__batch, n, frac_clamped); None until a saturation
-    row exists. The build corpus clamps nothing by construction, so
-    sustained growth from 0 = the stream is leaving the fitted range —
-    schedule an offline ``sq_build_index`` refit + ``reset_saturation``."""
-    live = log_live(spark, f"{index_path}/sat")
-    if live is None:
-        return None
-    per = live.groupBy(BATCH_COL).agg(*_sat_sums())
-    return per.select(
-        BATCH_COL,
-        "n",
-        (F.col("n_clamped") / F.col("n_components"))
-        .cast("double")
-        .alias("frac_clamped"),
-    )
-
-
-def saturation_signal(
-    spark: SparkSession, index_path: str, refit_frac: float = 0.01
-) -> DataFrame | None:
-    """One row over ALL appended-so-far vectors: (n, n_components,
-    n_clamped, frac_clamped, refit). Pure merge of the mergeable rows —
-    cost independent of appended volume. ``refit`` trips when more
-    than ``refit_frac`` of streamed components clamped (an absolute
-    threshold — the baseline is exactly 0)."""
-    live = log_live(spark, f"{index_path}/sat")
-    if live is None:
-        return None
-    out = live.agg(*_sat_sums()).select(
-        "*",
-        (F.col("n_clamped") / F.col("n_components"))
-        .cast("double")
-        .alias("frac_clamped"),
-    )
-    return out.select(
-        "*", (F.col("frac_clamped") > F.lit(refit_frac)).alias("refit")
-    )
-
-
-def compact_saturation(
-    spark: SparkSession, index_path: str, up_to_batch: int
-) -> int:
-    """Fold old saturation rows by pure sum."""
-    return compact_log(
-        spark,
-        f"{index_path}/sat",
-        up_to_batch,
-        lambda live: live.agg(*_sat_sums()),
-    )
-
-
-def reset_saturation(spark: SparkSession, index_path: str) -> None:
-    """Drop the saturation log after a bounds refit (old rows were
-    measured against the old bounds)."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(index_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/sat")
-    if fs.exists(p) and not fs.delete(p, True):
-        raise RuntimeError(f"could not remove {index_path}/sat")
-    invalidate_watermark_cache(f"{index_path}/sat")

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .batchlog import attach_batch_sink
+
 BUCKET_COL = "__bucket"
 
 
@@ -89,16 +91,10 @@ def streaming_upsert(
     Append-mode source rows flow through foreachBatch, so arbitrary
     batch DataFrame logic (the bucket merge) runs per micro-batch."""
 
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_batch(batch_df, path, key_col, order_cols, num_buckets)
-
-    return (
-        stream_df.writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return attach_batch_sink(
+        stream_df,
+        checkpoint,
+        lambda df, _bid: upsert_batch(df, path, key_col, order_cols, num_buckets),
     )
 
 

@@ -126,13 +126,16 @@ SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
-    matched = set()
+    matched, files = set(), set()
     for item in items:
         key = item.nodeid.split("/")[-1]
+        files.add(key.split("::")[0])
         if key in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
             matched.add(key)
-    stale = SLOW_TESTS - matched
+    # only entries of files this run collected can be judged stale — a
+    # partial run (one test file) must not flag every other file's
+    stale = {t for t in SLOW_TESTS - matched if t.split("::")[0] in files}
     if stale and not config.option.collectonly:
         import warnings
 

@@ -178,31 +178,3 @@ def test_pagerank_int_partitioning_invariant(spark):
             for r in pagerank_int(df.repartition(parts), iters=4).collect()
         }
         assert got == base, parts
-
-
-def test_pagerank_int_sql_twin_matches_exactly(spark):
-    """The single-statement SQL-unrolled twin (r11 experiment —
-    recorded NEGATIVE result for performance, see its docstring) must
-    still reproduce pagerank_int bit-for-bit: it is the oracle-parity
-    form of the same integer arithmetic."""
-    from mapreduce_task_spark.operators.graph import pagerank_int, pagerank_int_sql
-
-    x = 3
-    pairs = []
-    for _ in range(120):
-        x = (x * 1103515245 + 12345) % (1 << 31)
-        a, b = (x >> 4) % 30, (x >> 11) % 30
-        if a != b:
-            pairs.append((a, b))
-    df = spark.createDataFrame(
-        [Row(src=a, dst=b) for a, b in sorted(set(pairs))],
-        "src bigint, dst bigint",
-    )
-    want = sorted(
-        (r["node"], r["rank_pu"]) for r in pagerank_int(df, iters=3).collect()
-    )
-    got = sorted(
-        (r["node"], r["rank_pu"])
-        for r in pagerank_int_sql(df, iters=3).collect()
-    )
-    assert got == want and len(got) > 0

@@ -25,14 +25,14 @@ def test_duplicate_pairs_dedupe(spark):
 def test_malformed_lines_dropped_and_counted(spark):
     # P6/P7: blank lines and lines without a tab are dropped + counted
     # (TraceInsertIndexMapper.java:102-115)
-    lines = ["a\td1", "", "   ", "no-tab-here", "b\td2\textra"]
+    lines = ["a\td1", "", "   ", "no-tab-here", "b\td2\textra", "\t", " \t "]
     obs = Observation("ii")
     pairs = read_tab_pairs(spark, _lines_df(spark, lines), observation=obs)
     rows = sorted((r["word"], r["doc_id"]) for r in pairs.collect())
     # split("\t", 2) keeps the remainder in the value, like Java split
     assert rows == [("a", "d1"), ("b", "d2\textra")]
-    assert obs.get["MALFORMED_LINES"] == 3
-    assert obs.get["RAW_LINES"] == 5
+    assert obs.get["MALFORMED_LINES"] == 5
+    assert obs.get["RAW_LINES"] == 7
 
 
 def test_positional_index_and_phrase_search_match_python_replay(spark, sf_small):

@@ -57,3 +57,53 @@ def test_task_metrics_collector(spark, sf_small):
     assert totals["input_bytes"] > 0
     assert totals["shuffle_write_bytes"] > 0
     assert totals["shuffle_read_bytes"] > 0
+
+
+def test_span_ring_keeps_newest_spans():
+    from mapreduce_task_spark.obs.tracing import MAX_RECORDED_SPANS, span
+
+    clear_recorded_spans()
+    extra = 5
+    for i in range(MAX_RECORDED_SPANS + extra):
+        with span(f"s{i}"):
+            pass
+    spans = get_recorded_spans()
+    assert len(spans) == MAX_RECORDED_SPANS
+    assert spans[0].name == f"s{extra}"
+    assert spans[-1].name == f"s{MAX_RECORDED_SPANS + extra - 1}"
+    clear_recorded_spans()
+
+
+def test_microbatch_span_sits_on_the_wall_clock_timeline(spark):
+    """A micro-batch span starts at the progress event's trigger
+    timestamp and lasts triggerExecution — comparable with driver spans
+    stamped by time.time_ns()."""
+    import time
+    from datetime import datetime, timezone
+    from types import SimpleNamespace
+
+    from mapreduce_task_spark.obs.streaming import StreamingMetricsCollector
+
+    before_ns = time.time_ns()
+    now = datetime.now(timezone.utc)
+    progress = SimpleNamespace(
+        id="q1",
+        batchId=3,
+        numInputRows=10,
+        inputRowsPerSecond=5.0,
+        durationMs={"triggerExecution": 250, "addBatch": 200},
+        stateOperators=[],
+        observedMetrics={},
+        timestamp=now.strftime("%Y-%m-%dT%H:%M:%S.") + f"{now.microsecond // 1000:03d}Z",
+    )
+    clear_recorded_spans()
+    StreamingMetricsCollector(spark).onQueryProgress(
+        SimpleNamespace(progress=progress)
+    )
+    (s,) = [s for s in get_recorded_spans() if s.name == "stream.microbatch"]
+    assert s.start_ns > 0 and s.end_ns >= s.start_ns
+    assert s.end_ns - s.start_ns == 250 * 1_000_000
+    # the trigger timestamp is the wall clock read beside it
+    assert abs(s.start_ns - before_ns) < 1_000_000_000
+    assert s.attributes["stream.batch_id"] == 3
+    clear_recorded_spans()

@@ -359,3 +359,24 @@ def test_retrain_refuses_vectorless_ivfsq(spark, sf_small, tmp_path):
     promote_version(spark, root, "v1")
     with pytest.raises(ValueError, match="store_vectors=False"):
         retrain_index(spark, root)
+
+
+def test_retrain_refuses_flat_sq8_root(spark, sf_small, tmp_path):
+    """A flat SQ8 index has no coarse quantizer to retrain: polling its
+    root must refuse loudly, not report ``due=False`` forever while
+    ``retrain_index`` raises on the same kind."""
+    from mapreduce_task_spark.operators.sq import sq_build_index
+    from mapreduce_task_spark.streaming.sq_ingest import append_batch
+
+    emb = _emb(spark, sf_small)
+    root = str(tmp_path / "root")
+    sq_build_index(emb.filter(F.col("vec_id") < 200), f"{root}/v1", dim=64)
+    promote_version(spark, root, "v1")
+    append_batch(
+        _shift(emb.filter(F.col("vec_id") >= 200), 9.0), 0,
+        current_index_path(spark, root),
+    )
+    with pytest.raises(ValueError, match="got 'sq8'"):
+        retrain_if_due(spark, root)
+    with pytest.raises(ValueError, match="got 'sq8'"):
+        retrain_index(spark, root)
