@@ -214,9 +214,14 @@ def main() -> int:
         ref = load_reference()
         if ref:
             selection = "ratio_vs_ref"
+            # rows absent from the reference all rank at inf; among
+            # them (and any other tie) the slower build goes first
             worst = sorted(
                 phases,
-                key=lambda n: timings[n] / ref[n] if n in ref else float("inf"),
+                key=lambda n: (
+                    timings[n] / ref[n] if n in ref else float("inf"),
+                    phases[n]["build_sec"],
+                ),
                 reverse=True,
             )[:6]
         else:

@@ -89,10 +89,10 @@ def semantic_contaminated_ids(
     NULL embeddings (extraction failures) propagate a NULL cosine and
     are NOT flagged — an unembedded doc can't be judged semantically;
     run the n-gram rung beside this one. Zero-norm embeddings are
-    undefined input for cosine (see ``quantized_cosine``) and are
+    undefined input for cosine (see ``cosine_sql``) and are
     excluded on both sides rather than aborting the scan.
     """
-    from .similarity import int_dot, quantized_cosine, with_quantized
+    from .similarity import cosine_sql, with_quantized
 
     qd = with_quantized(docs, vec_col).select(
         F.col(id_col), F.col("qv"), F.col("nq")
@@ -103,10 +103,7 @@ def semantic_contaminated_ids(
         F.col("bnq") > 0
     )
     hits = qd.crossJoin(F.broadcast(qb)).where(
-        quantized_cosine(
-            int_dot(F.col("qv"), F.col("bqv")), F.col("nq"), F.col("bnq")
-        )
-        >= threshold
+        F.expr(cosine_sql("qv", "bqv", "nq", "bnq")) >= threshold
     )
     return hits.select(id_col).distinct()
 

@@ -25,8 +25,6 @@ codegen expressions end to end.
 
 from __future__ import annotations
 
-import json as _json
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import hash64
@@ -35,81 +33,27 @@ from .pinning import (
     lazy_checkpoint as _lazy_checkpoint,
     lazy_checkpoint_tiny as _lazy_checkpoint_tiny,
 )
-from .similarity import VALID_METRICS, with_quantized
+from .index_store import (  # noqa: F401 — check/read/write re-exported
+    check_index_meta,
+    load_dataset,
+    read_index_meta,
+    record_delta_schema,
+    save_dataset,
+    write_index_meta,
+)
+from .similarity import (
+    BY_APPROX,
+    BY_EXACT,
+    RESIDUAL_FN,
+    VALID_METRICS,
+    cand_side,
+    query_side,
+    rank_topk,
+    with_quantized,
+)
 
-_META_FILE = "_INDEX_META.json"
-
-
-def write_index_meta(spark, path: str, meta: dict) -> None:
-    """Record index-level facts (metric, shape) as a tiny JSON file
-    beside the index data, via the Hadoop FileSystem API so it works
-    on any Spark-supported storage. ~100 bytes; written last in a
-    build so a crashed build leaves no meta (and is re-built anyway —
-    build is mode=overwrite throughout)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{_META_FILE}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(_json.dumps(meta, sort_keys=True).encode()))
-    finally:
-        out.close()
-
-
-def read_index_meta(spark, path: str) -> dict | None:
-    """Read the index meta file; None for a legacy (pre-meta) index."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{_META_FILE}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    n = fs.getFileStatus(jpath).getLen()
-    if n > 65536:
-        raise ValueError(
-            f"index meta at {path} is {n} bytes (>64 KiB) — not a meta file"
-        )
-    stream = fs.open(jpath)
-    try:
-        # one buffered read via commons-io (on Spark's classpath), not
-        # one py4j round-trip per byte
-        buf = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return _json.loads(buf.decode())
-
-
-def check_index_meta(spark, path: str, *, metric: str, **shape) -> None:
-    """Refuse a search/append whose parameters contradict what the
-    index was built with. Metric is the safety-critical one — scoring
-    un-normalized vectors as cosine (or vice versa) returns silently
-    wrong rankings, the exact failure a persisted index invites. The
-    meta read is a one-time ~100-byte driver-side file read per plan
-    build, the deliberate exception to the no-metadata-read contract
-    (recorded here): shape params stay caller-supplied (plan-time),
-    meta only VETOES a contradiction. Legacy indexes without a meta
-    file were all built metric="l2": l2 searches proceed, cosine
-    searches are refused (their vectors are not normalized)."""
-    meta = read_index_meta(spark, path)
-    if meta is None:
-        if metric != "l2":
-            raise ValueError(
-                f"index at {path} has no recorded metric (legacy build, "
-                f"l2-only); rebuild with metric={metric!r} to search it "
-                f"as {metric}"
-            )
-        return
-    built = meta.get("metric", "l2")
-    if built != metric:
-        raise ValueError(
-            f"index at {path} was built with metric={built!r}; "
-            f"search requested metric={metric!r}"
-        )
-    for key, val in shape.items():
-        if key in meta and meta[key] != val:
-            raise ValueError(
-                f"index at {path} was built with {key}={meta[key]!r}; "
-                f"caller passed {key}={val!r}"
-            )
+# the residual of (qv) against its home/probed centroid (cqv)
+_RESIDUAL_SQL = f"zip_with(qv, cqv, {RESIDUAL_FN})"
 
 
 def _subvectors(
@@ -132,25 +76,19 @@ def _subvectors(
     )
 
 
-def _sub_dist(a, b):
-    """Exact int64 squared L2 between two dsub-length int arrays."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, d: acc + d,
-    )
-
-
 def _sub_dist_sql(a: str, b: str) -> str:
-    """``_sub_dist`` as a SQL fragment for ``F.expr`` construction —
-    the identical expression tree (zip_with + aggregate over int64)
-    built in O(1) py4j round-trips instead of O(1) *per lambda* times
-    every loop iteration. The r13 optimization round measured the
-    Python-API construction of the m-way argmin/ADC expressions at
-    ~2 s of driver time per ``ivfpq_topk`` build (cProfile: the
-    ``_create_lambda`` stack); the F.expr form is the same fix
-    ``similarity._update_centroids`` and ``sq._bounds_agg`` already
-    ship. Results are bit-identical (golden-hash + oracle gated)."""
+    """Exact int64 squared L2 between two dsub-length int arrays, as a
+    SQL fragment for ``F.expr`` construction — zip_with + aggregate
+    over int64 built in O(1) py4j round-trips instead of O(1) *per
+    lambda* times every loop iteration. The r13 optimization round
+    measured the Python-API construction of the m-way argmin/ADC
+    expressions at ~2 s of driver time per ``ivfpq_topk`` build
+    (cProfile: the ``_create_lambda`` stack); the F.expr form is the
+    same fix ``similarity._update_centroids`` and ``sq._bounds_agg``
+    already ship. Results are bit-identical (golden-hash + oracle
+    gated). An unrolled ``element_at`` form measured slower:
+    ``ivfpq_build_index`` median 4.04 -> 5.06 s over 6 builds each on
+    a 4-core host, identical datasets."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         f"CAST(0 AS BIGINT), (acc, d) -> acc + d)"
@@ -419,22 +357,9 @@ def _encode_codes(
     own projection by hand (codegen CSE does not deduplicate lambda
     subtrees, so referencing the filter from all m argmins would
     re-run it m times)."""
-    if per_list:
-        packed = cents.agg(
-            F.array_sort(
-                F.collect_list(F.struct("cluster", "sub", "j", "cqv"))
-            ).alias("__cb")
-        )
-        # the row's own cluster book: cluster is constant within the
-        # filtered slice, so ordering is still (sub, j)
-        book = F.filter(F.col("__cb"), lambda c: c["cluster"] == F.col("cluster"))
-    else:
-        packed = cents.agg(
-            F.array_sort(F.collect_list(F.struct("sub", "j", "cqv"))).alias("__cb")
-        )
-        book = F.col("__cb")
+    packed, book = _sorted_book(cents, per_list)
     pre = qd.crossJoin(F.broadcast(packed)).select(
-        id_col, *extra, "qv", book.alias("__bk")
+        id_col, *extra, "qv", F.expr(book).alias("__bk")
     )
     if per_list:
         # a vector homed to a cluster with NO per-list codebook (a list
@@ -482,6 +407,16 @@ def _encode_codes(
 
     codes = F.expr("array(" + ", ".join(best(s) for s in range(m)) + ")")
     return pre.select(id_col, *extra, codes.alias("codes"))
+
+
+def _sorted_book(cents: DataFrame, per_list: bool) -> tuple[DataFrame, str]:
+    """(one broadcastable row ``__cb`` holding the codebook sorted by
+    (sub, j), the SQL of a row's own book). Per-list books are sorted
+    (cluster, sub, j) and narrowed to the row's ``cluster``: cluster is
+    constant within the filtered slice, so ordering is still (sub, j)."""
+    keys = ("cluster", "sub", "j", "cqv") if per_list else ("sub", "j", "cqv")
+    packed = cents.agg(F.array_sort(F.collect_list(F.struct(*keys))).alias("__cb"))
+    return packed, "filter(__cb, c -> c.cluster = cluster)" if per_list else "__cb"
 
 
 def pq_encode(
@@ -572,25 +507,14 @@ def pq_adc_topk(
         )
     )
     if refine:
-        shortlist = _rank_topk_by_distance(scored, refine * k).drop("rank")
+        shortlist = rank_topk(scored, refine * k, BY_APPROX).drop("rank")
         full = with_quantized(df, vec_col, metric=metric).select(
             id_col, "qv", "nq"
         )
-        qvecs = full.join(query_ids.select(id_col), id_col).select(
-            F.col(id_col).alias("query_id"),
-            F.col("qv").alias("qv_q"),
-            F.col("nq").alias("nq_q"),
-        )
-        cvecs = full.select(
-            F.col(id_col).alias("cand_id"),
-            F.col("qv").alias("qv_c"),
-            F.col("nq").alias("nq_c"),
-        )
+        qvecs = query_side(full.join(query_ids.select(id_col), id_col), id_col, keep=())
+        cvecs = cand_side(full, id_col, keep=())
         return _refine_exact(shortlist, qvecs, cvecs, k, on=["cand_id"])
-    w = Window.partitionBy("query_id").orderBy(F.asc("approx_d"), F.asc("cand_id"))
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, k, BY_APPROX)
 
 
 def _ivfpq_adc_scored(
@@ -674,13 +598,6 @@ def _adc_sum_sql(m: int) -> str:
     )
 
 
-def _rank_topk_by_distance(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.asc("approx_d"), F.asc("cand_id"))
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
-    )
-
-
 def _refine_exact(
     shortlist: DataFrame,
     qvecs: DataFrame,
@@ -709,19 +626,14 @@ def _refine_exact(
     (query_id, cand_id, approx_d, exact_d, rank) with rank 1 =
     exact-nearest, ties to lowest cand_id (the package-wide top-k
     convention)."""
-    sl = shortlist.join(F.broadcast(qvecs), "query_id")
-    from .similarity import int_dot
+    from .similarity import sq_dist_sql
 
-    exact = (
-        F.col("nq_q") + F.col("nq_c") - 2 * int_dot(F.col("qv_q"), F.col("qv_c"))
-    )
+    sl = shortlist.join(F.broadcast(qvecs), "query_id")
+    exact = F.expr(sq_dist_sql("qv_q", "nq_q", "qv_c", "nq_c"))
     scored = cvecs.join(F.broadcast(sl), on).select(
         "query_id", "cand_id", "approx_d", exact.alias("exact_d")
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("exact_d"), F.asc("cand_id"))
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, k, BY_EXACT)
 
 
 def _refine_stage(
@@ -739,23 +651,9 @@ def _refine_stage(
     Factored so the inline operator, the persisted-index search, and
     the streaming delta search cannot drift apart — their bit-for-bit
     equality guarantees are by construction."""
-    shortlist = _rank_topk_by_distance(scored, refine * k).drop("rank")
-    qvecs = qd.select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-    )
+    shortlist = rank_topk(scored, refine * k, BY_APPROX).drop("rank")
+    qvecs = query_side(qd, id_col, keep=())
     return _refine_exact(shortlist, qvecs, cvecs, k, on=["cluster", "cand_id"])
-
-
-def _vectors_as_cvecs(vectors: DataFrame, id_col: str) -> DataFrame:
-    """(id, cluster, qv, nq) -> refine's candidate frame naming."""
-    return vectors.select(
-        F.col(id_col).alias("cand_id"),
-        "cluster",
-        F.col("qv").alias("qv_c"),
-        F.col("nq").alias("nq_c"),
-    )
 
 
 def ivfpq_topk(
@@ -834,7 +732,7 @@ def ivfpq_topk(
     ``lazy_checkpoint``; the production path is the persisted index
     (``ivfpq_build_index``), which pins by writing to storage.
     """
-    from .similarity import assign_clusters, kmeans_lite_fit, probe_clusters
+    from .similarity import assign_clusters, kmeans_lite_fit, probe_residuals
 
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -859,13 +757,8 @@ def ivfpq_topk(
         # original-vector frame) beside the residual chain — pin it so
         # the corpus scan + argmin run once, not per consumer
         homed = pin(homed)
-    resid = (
-        homed.join(F.broadcast(cj), "cluster")
-        .select(
-            id_col,
-            "cluster",
-            F.zip_with("qv", "cqv", lambda a, b: a - b).alias("qv"),
-        )
+    resid = homed.join(F.broadcast(cj), "cluster").select(
+        id_col, "cluster", F.expr(_RESIDUAL_SQL).alias("qv")
     )
     if pin is not None:
         resid = pin(resid)
@@ -884,25 +777,20 @@ def ivfpq_topk(
             resid, cents, id_col, m, dsub, extra=("cluster",)
         ).select(F.col(id_col).alias("cand_id"), "cluster", "codes")
 
-    probes = probe_clusters(
+    rq = probe_residuals(
         qd.join(query_ids.select(id_col), id_col), coarse, id_col, nprobe=nprobe
-    )
-    rq = probes.join(F.broadcast(cj), "cluster").select(
-        F.col(id_col).alias("query_id"),
-        "cluster",
-        F.zip_with("qv", "cqv", lambda a, b: a - b).alias("qv"),
-    )
+    ).withColumnRenamed(id_col, "query_id")
     scored = _ivfpq_adc_scored(cand, rq, cents, m, dsub, per_list=per_list)
     if refine:
         return _refine_stage(
             scored,
             qd.join(query_ids.select(id_col), id_col),
-            _vectors_as_cvecs(homed, id_col),
+            cand_side(homed, id_col),
             id_col,
             k,
             refine,
         )
-    return _rank_topk_by_distance(scored, k).drop("cluster")
+    return rank_topk(scored, k, BY_APPROX).drop("cluster")
 
 
 def ivfpq_encode_batch(
@@ -946,7 +834,7 @@ def ivfpq_encode_batch(
         "cluster",
         F.col("qv").alias("__oqv"),
         F.col("nq").alias("__onq"),
-        F.zip_with("qv", "cqv", lambda a, b: a - b).alias("qv"),
+        F.expr(_RESIDUAL_SQL).alias("qv"),
     )
     enc = _encode_codes(
         resid, cents, id_col, m, dsub,
@@ -1022,63 +910,55 @@ def ivfpq_build_index(
         raise ValueError(f"metric must be one of {VALID_METRICS}, got {metric!r}")
     dsub = dim // m
     spark = df.sparkSession
+    meta = {
+        "kind": "ivfpq",
+        "metric": metric,
+        "m": m,
+        "dim": dim,
+        "ksub": ksub,
+        "n_clusters": n_clusters,
+        "per_list": per_list,
+        "coarse_rounds": coarse_rounds,
+        "pq_rounds": pq_rounds,
+    }
     qd, coarse = kmeans_lite_fit(
         df, id_col, vec_col, n_clusters, dim, coarse_rounds, metric=metric,
         prequantized=prequantized,
     )
-    coarse.write.mode("overwrite").parquet(f"{path}/coarse")
-    coarse_l = spark.read.parquet(f"{path}/coarse")
+    save_dataset(coarse, path, "coarse", meta)
+    coarse_l = load_dataset(spark, path, "coarse", meta)
 
     cj = coarse_l.select(F.col("j").alias("cluster"), "cqv")
-    assign_clusters(qd, coarse_l, id_col).write.mode("overwrite").partitionBy(
-        "cluster"
-    ).parquet(f"{path}/vectors")
-    homed_l = spark.read.parquet(f"{path}/vectors")
+    save_dataset(
+        assign_clusters(qd, coarse_l, id_col), path, "vectors", meta,
+        partition_by=("cluster",),
+    )
+    homed_l = load_dataset(spark, path, "vectors", meta)
     resid = (
         homed_l.join(F.broadcast(cj), "cluster")
-        .select(
-            id_col,
-            "cluster",
-            F.zip_with("qv", "cqv", lambda a, b: a - b).alias("qv"),
-        )
+        .select(id_col, "cluster", F.expr(_RESIDUAL_SQL).alias("qv"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
         if per_list:
             cents = _fit_codebook_per_list(resid, id_col, m, ksub, dsub, pq_rounds)
-            cents.write.mode("overwrite").parquet(f"{path}/codebook")
-            cents_l = spark.read.parquet(f"{path}/codebook")
-            _encode_codes_per_list(resid, cents_l, id_col, m, dsub).write.mode(
-                "overwrite"
-            ).partitionBy("cluster").parquet(f"{path}/codes")
         else:
             cents = _fit_codebook(
                 resid.select(id_col, "qv"), id_col, m, ksub, dsub, pq_rounds
             )
-            cents.write.mode("overwrite").parquet(f"{path}/codebook")
-            cents_l = spark.read.parquet(f"{path}/codebook")
-            _encode_codes(
-                resid, cents_l, id_col, m, dsub, extra=("cluster",)
-            ).write.mode("overwrite").partitionBy("cluster").parquet(
-                f"{path}/codes"
-            )
+        save_dataset(cents, path, "codebook", meta)
+        cents_l = load_dataset(spark, path, "codebook", meta)
+        codes = _encode_codes(
+            resid, cents_l, id_col, m, dsub, extra=("cluster",), per_list=per_list
+        ).select(id_col, "cluster", "codes")
+        save_dataset(codes, path, "codes", meta, partition_by=("cluster",))
     finally:
         resid.unpersist()
-    write_index_meta(
-        spark,
-        path,
-        {
-            "kind": "ivfpq",
-            "metric": metric,
-            "m": m,
-            "dim": dim,
-            "ksub": ksub,
-            "n_clusters": n_clusters,
-            "per_list": per_list,
-            "coarse_rounds": coarse_rounds,
-            "pq_rounds": pq_rounds,
-        },
+    record_delta_schema(
+        meta, (id_col, "cluster", "qv", "nq", "codes"), ("vectors", "codes"),
+        ("cluster",),
     )
+    write_index_meta(spark, path, meta)
 
 
 def ivfpq_search_index(
@@ -1139,46 +1019,51 @@ def ivfpq_search_index(
     rankings. ``metric="cosine"`` unit-normalizes the QUERIES on the
     same integer grid the build normalized the corpus on; everything
     downstream is the unchanged L2 machinery (see ``ivfpq_topk``)."""
-    from .similarity import probe_clusters
+    from .similarity import allowed_only
 
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    check_index_meta(spark, path, metric=metric, m=m, dim=dim, per_list=per_list)
-    coarse = spark.read.parquet(f"{path}/coarse")
-    cents = spark.read.parquet(f"{path}/codebook")
-    cand = spark.read.parquet(f"{path}/codes").select(
+    meta = check_index_meta(
+        spark, path, metric=metric, m=m, dim=dim, per_list=per_list
+    )
+    cand = load_dataset(spark, path, "codes", meta).select(
         F.col(id_col).alias("cand_id"), "cluster", "codes"
     )
-    if filter_ids is not None:
-        cand = cand.join(
-            filter_ids.select(F.col(id_col).alias("cand_id")),
-            "cand_id",
-            "leftsemi",
-        )
-
-    qd = with_quantized(queries, vec_col, metric=metric).select(id_col, "qv", "nq")
-    cj = coarse.select(F.col("j").alias("cluster"), "cqv")
-    rq = (
-        probe_clusters(qd, coarse, id_col, nprobe=nprobe)
-        .join(F.broadcast(cj), "cluster")
-        .select(
-            F.col(id_col).alias("query_id"),
-            "cluster",
-            F.zip_with("qv", "cqv", lambda a, b: a - b).alias("qv"),
-        )
+    return _ivfpq_serve(
+        spark, path, meta, queries, [allowed_only(cand, filter_ids, id_col)],
+        id_col, vec_col, k, nprobe, m, dim, per_list, refine, metric,
     )
-    scored = _ivfpq_adc_scored(cand, rq, cents, m, dsub, per_list=per_list)
-    if refine:
-        return _refine_stage(
-            scored,
-            qd,
-            _vectors_as_cvecs(spark.read.parquet(f"{path}/vectors"), id_col),
-            id_col,
-            k,
-            refine,
-        )
-    return _rank_topk_by_distance(scored, k).drop("cluster")
+
+
+def _ivfpq_serve(
+    spark, path, meta, queries, cands, id_col, vec_col, k, nprobe, m, dim,
+    per_list, refine, metric, extra_vectors=None,
+) -> DataFrame:
+    """The persisted IVF-PQ search after the candidate reads, shared
+    with the streaming delta search: probe the coarse quantizer, ADC-
+    score each (cand_id, cluster, codes) frame of ``cands`` through its
+    own join against the broadcast per-(query, probed cluster) tables
+    (so partition pruning holds on each side), merge, and either rank
+    by ADC or exact-rerank against the index's ``vectors`` (plus
+    ``extra_vectors``, an (id, cluster, qv, nq) frame)."""
+    from .similarity import probe_residuals
+
+    coarse = load_dataset(spark, path, "coarse", meta)
+    cents = load_dataset(spark, path, "codebook", meta)
+    qd = with_quantized(queries, vec_col, metric=metric).select(id_col, "qv", "nq")
+    rq = probe_residuals(qd, coarse, id_col, nprobe=nprobe).withColumnRenamed(
+        id_col, "query_id"
+    )
+    scored = None
+    for cand in cands:
+        side = _ivfpq_adc_scored(cand, rq, cents, m, dim // m, per_list=per_list)
+        scored = side if scored is None else scored.unionByName(side)
+    if not refine:
+        return rank_topk(scored, k, BY_APPROX).drop("cluster")
+    vectors = load_dataset(spark, path, "vectors", meta)
+    if extra_vectors is not None:
+        vectors = vectors.unionByName(extra_vectors.select(*vectors.columns))
+    return _refine_stage(scored, qd, cand_side(vectors, id_col), id_col, k, refine)
 
 
 def index_list_stats(
@@ -1200,6 +1085,7 @@ def index_list_stats(
     log when ``include_delta`` (what a ``search_with_delta`` actually
     scans)."""
     from ..streaming.batchlog import log_live
+    from .index_store import recorded_schema
 
     jvm = spark._jvm
     fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
@@ -1212,18 +1098,23 @@ def index_list_stats(
             break
     if name is None:
         raise ValueError(f"no IVF/IVF-PQ list dataset under {path}")
-    base_df = spark.read.parquet(f"{path}/{name}")
+    meta = read_index_meta(spark, path) or {}
+    base_df = load_dataset(spark, path, name, meta)
     if "cluster" not in base_df.columns:
         # an SQ8 index also persists a 'codes' dataset, but flat —
         # no inverted lists to report occupancy for
-        kind = (read_index_meta(spark, path) or {}).get("kind", "unknown")
+        kind = meta.get("kind", "unknown")
         raise ValueError(
             f"index at {path} (kind={kind!r}) has no cluster-partitioned "
             "list dataset — occupancy stats apply to IVF/IVF-PQ/IVF-SQ "
             "indexes only"
         )
     base = base_df.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_base"))
-    delta = log_live(spark, f"{path}/delta") if include_delta else None
+    delta = (
+        log_live(spark, f"{path}/delta", recorded_schema(meta, "delta"))
+        if include_delta
+        else None
+    )
     if delta is None:
         out = base.select("cluster", "n_base", F.lit(0).alias("n_delta"))
     else:

@@ -28,6 +28,14 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .index_store import (
+    load_dataset,
+    read_index_meta,
+    record_delta_schema,
+    save_dataset,
+    write_index_meta,
+)
+
 QUANT = 1_000_000  # 6-decimal fixed point; |v|<1 -> products < 2^44
 
 
@@ -45,10 +53,10 @@ def hyperplanes(nbits: int, dim: int) -> list[list[int]]:
     return [[_hp_component(s, i) for i in range(dim)] for s in range(nbits)]
 
 
-def quantize(col: Column | str) -> Column:
-    """array<float> -> array<bigint> fixed-point (floor(v * 1e6))."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT))))
+def quantize(col: str) -> Column:
+    """array<float> -> array<bigint> fixed-point (floor(v * 1e6)), built
+    as one SQL string (see ``int_dot_sql``)."""
+    return F.expr(f"transform({col}, x -> floor(CAST(x AS DOUBLE) * {float(QUANT)}D))")
 
 
 def int_dot(a: Column, b: Column) -> Column:
@@ -73,9 +81,17 @@ def int_dot_sql(a: str, b: str) -> str:
     )
 
 
-def quantized_cosine(dot: Column, na: Column, nb: Column) -> Column:
-    """Deterministic double cosine from quantized dot + precomputed
-    self-dots (all integer-valued).
+def sq_dist_sql(a: str, na: str, b: str, nb: str) -> str:
+    """Exact int64 squared L2 between quantized arrays ``a`` and ``b``
+    from their self-dots ``na``/``nb``: ||a - b||^2 = na + nb - 2 a.b,
+    as a SQL fragment (see ``int_dot_sql``)."""
+    return f"{na} + {nb} - 2 * {int_dot_sql(a, b)}"
+
+
+def cosine_sql(a: str, b: str, na: str, nb: str) -> str:
+    """Deterministic double cosine of quantized arrays ``a`` and ``b``
+    from their quantized dot and self-dots ``na``/``nb`` (all
+    integer-valued), as a SQL fragment (see ``int_dot_sql``).
 
     Input contract: ZERO vectors (self-dot 0) are undefined input —
     cosine has no value there, and under ANSI mode (Spark 4 default)
@@ -90,7 +106,64 @@ def quantized_cosine(dot: Column, na: Column, nb: Column) -> Column:
     rank strictly after every real candidate and drop out of any
     top-k tighter than the pool (pinned in
     tests/test_similarity.py::test_degenerate_embedding_contract)."""
-    return dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double")))
+    return (
+        f"CAST({int_dot_sql(a, b)} AS DOUBLE)"
+        f" / (sqrt(CAST({na} AS DOUBLE)) * sqrt(CAST({nb} AS DOUBLE)))"
+    )
+
+
+# the cosine of a query (qv_q, nq_q) x candidate (qv_c, nq_c) row
+COSINE_SQL = cosine_sql("qv_q", "qv_c", "nq_q", "nq_c")
+
+
+def scored_cosine(pairs: DataFrame) -> DataFrame:
+    """(query_id, cand_id, cos) over joined query x candidate rows, the
+    self-pair dropped — the scoring every cosine top-k here shares."""
+    return pairs.filter("cand_id != query_id").select(
+        "query_id", "cand_id", F.expr(COSINE_SQL).alias("cos")
+    )
+
+
+def rank_topk(scored: DataFrame, k: int, order: str) -> DataFrame:
+    """Each query's ``k`` first rows under ``order`` (a SQL ORDER BY
+    list ending in a unique tie-break), numbered 1.. in ``rank``. The
+    window is one SQL string (one JVM parse, not a py4j call chain per
+    spec element)."""
+    rank = F.expr(f"row_number() OVER (PARTITION BY query_id ORDER BY {order})")
+    return scored.select("*", rank.alias("rank")).filter(f"rank <= {int(k)}")
+
+
+def query_side(df: DataFrame, id_col: str, keep=("cluster",)) -> DataFrame:
+    """An (id, qv, nq, *keep) frame renamed to the query side of a
+    scoring join: (query_id, qv_q, nq_q, *keep)."""
+    return df.selectExpr(f"{id_col} AS query_id", "qv AS qv_q", "nq AS nq_q", *keep)
+
+
+def cand_side(df: DataFrame, id_col: str, keep=("cluster",)) -> DataFrame:
+    """An (id, qv, nq, *keep) frame renamed to the candidate side of a
+    scoring join: (cand_id, qv_c, nq_c, *keep)."""
+    return df.selectExpr(f"{id_col} AS cand_id", "qv AS qv_c", "nq AS nq_c", *keep)
+
+
+def allowed_only(
+    cand: DataFrame, filter_ids: DataFrame | None, id_col: str
+) -> DataFrame:
+    """Restrict ``cand_id`` candidates to the ``filter_ids`` allow-list
+    — the package-wide filtered-search contract (FAISS's IDSelector / a
+    vector store's metadata pre-filter): a left-semi join right after
+    the pruned scan, so disallowed rows drop before any scoring and
+    duplicates in the allow-list are harmless; no-op when None."""
+    if filter_ids is None:
+        return cand
+    return cand.join(
+        filter_ids.select(F.col(id_col).alias("cand_id")), "cand_id", "leftsemi"
+    )
+
+
+# the package-wide top-k orders: best first, ties to the lowest cand_id
+BY_COS = "cos DESC, cand_id ASC"
+BY_APPROX = "approx_d ASC, cand_id ASC"
+BY_EXACT = "exact_d ASC, cand_id ASC"
 
 
 VALID_METRICS = ("l2", "cosine")
@@ -116,25 +189,18 @@ def with_quantized(
     refine) serves cosine corpora — FAISS's normalize-then-L2
     equivalence, here on the engine's integer grid. Zero vectors are
     undefined input (no direction to normalize), same contract as
-    ``quantized_cosine``.
+    ``cosine_sql``.
     """
     if metric not in VALID_METRICS:
         raise ValueError(f"metric must be one of {VALID_METRICS}, got {metric!r}")
-    q = quantize(vec_col).alias("qv")
-    out = df.select("*", q)
+    out = df.select("*", quantize(vec_col).alias("qv"))
     if metric == "cosine":
         out = out.select("*", F.expr(int_dot_sql("qv", "qv")).alias("__n0"))
-        out = out.select(
-            *df.columns,
-            F.transform(
-                "qv",
-                lambda x: F.floor(
-                    x.cast("double")
-                    * F.lit(float(QUANT))
-                    / F.sqrt(F.col("__n0").cast("double"))
-                ),
-            ).alias("qv"),
+        unit = (
+            f"transform(qv, x -> floor(CAST(x AS DOUBLE) * {float(QUANT)}D"
+            " / sqrt(CAST(__n0 AS DOUBLE))))"
         )
+        out = out.select(*df.columns, F.expr(unit).alias("qv"))
     return out.select("*", F.expr(int_dot_sql("qv", "qv")).alias("nq"))
 
 
@@ -151,31 +217,9 @@ def brute_force_topk(
     the result is fully deterministic.
     """
     qd = with_quantized(df, vec_col)
-    queries = F.broadcast(
-        qd.join(query_ids, id_col).select(
-            F.col(id_col).alias("query_id"),
-            F.col("qv").alias("qv_q"),
-            F.col("nq").alias("nq_q"),
-        )
-    )
-    cands = qd.select(
-        F.col(id_col).alias("cand_id"), F.col("qv").alias("qv_c"), F.col("nq").alias("nq_c")
-    )
-    scored = (
-        queries.crossJoin(cands)
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            quantized_cosine(
-                int_dot(F.col("qv_q"), F.col("qv_c")), F.col("nq_q"), F.col("nq_c")
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
-    )
+    queries = F.broadcast(query_side(qd.join(query_ids, id_col), id_col, keep=()))
+    cands = cand_side(qd, id_col, keep=())
+    return rank_topk(scored_cosine(queries.crossJoin(cands)), k, BY_COS)
 
 
 def blocked_all_pairs_cosine(
@@ -286,12 +330,7 @@ def srp_lsh_topk(
     if probe_bits not in (0, 1):
         raise ValueError("probe_bits must be 0 or 1")
     bk = srp_buckets(df, id_col, vec_col, nbits=nbits, dim=dim)
-    q = bk.join(query_ids.select(id_col), id_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "bucket",
-    )
+    q = query_side(bk.join(query_ids.select(id_col), id_col), id_col, ("bucket",))
     if probe_bits:
         probes = F.array(
             F.col("bucket"),
@@ -303,28 +342,8 @@ def srp_lsh_topk(
         q = q.select(
             "query_id", "qv_q", "nq_q", F.explode(probes).alias("bucket")
         )
-    c = bk.select(
-        F.col(id_col).alias("cand_id"),
-        F.col("qv").alias("qv_c"),
-        F.col("nq").alias("nq_c"),
-        "bucket",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            quantized_cosine(
-                int_dot(F.col("qv_q"), F.col("qv_c")), F.col("nq_q"), F.col("nq_c")
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
-    )
+    c = cand_side(bk, id_col, ("bucket",))
+    return rank_topk(scored_cosine(F.broadcast(q).join(c, "bucket")), k, BY_COS)
 
 
 def probe_clusters(
@@ -341,23 +360,61 @@ def probe_clusters(
     tie-break built in, so a SQL oracle replays the probe set as
     ``row_number() <= nprobe`` over the identical ordering.
     """
-    if nprobe < 1:
-        raise ValueError("nprobe must be >= 1")
-    packed = cents.agg(F.collect_list(F.struct("j", "cqv", "cnq")).alias("__cents"))
-    # ONE F.expr string — the identical ranked-probe expression tree
-    # (array_sort over (d, j) structs, slice, j-extract) in O(1) py4j
-    # round trips; see int_dot_sql
-    probes = F.expr(
-        "transform(slice(array_sort(transform(__cents, "
-        f"c -> named_struct('d', nq + c.cnq - 2 * {int_dot_sql('qv', 'c.cqv')}, "
-        f"'j', c.j))), 1, {nprobe}), s -> s.j)"
-    )
-    return qd.crossJoin(F.broadcast(packed)).select(
+    probes = F.expr(f"transform({_probes_sql(nprobe)}, s -> s.j)")
+    return qd.crossJoin(F.broadcast(_packed(cents))).select(
         id_col, "qv", "nq", F.explode(probes).alias("cluster")
     )
 
 
-def _nearest_cluster(qd: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
+def probe_residuals(
+    qd: DataFrame, cents: DataFrame, id_col: str = "vec_id", nprobe: int = 1
+) -> DataFrame:
+    """(id, cluster, qv): one row per (vector, probed cluster) with the
+    vector's residual against that cluster's centroid — the IVF-PQ
+    query side. The same ranked probe set as ``probe_clusters``; each
+    probe carries its centroid out of the packed broadcast row, so no
+    second join against the centroid table is needed."""
+    probes = F.expr(_probes_sql(nprobe, with_centroid=True))
+    return (
+        qd.crossJoin(F.broadcast(_packed(cents)))
+        .select(id_col, "qv", F.explode(probes).alias("__p"))
+        .select(
+            id_col,
+            F.col("__p.j").alias("cluster"),
+            F.expr(f"zip_with(qv, __p.cqv, {RESIDUAL_FN})").alias("qv"),
+        )
+    )
+
+
+# the residual of a vector against a centroid, as a zip_with lambda
+RESIDUAL_FN = "(a, b) -> a - b"
+
+
+def _packed(cents: DataFrame) -> DataFrame:
+    """The k-row centroid table as ONE broadcastable row of structs."""
+    return cents.agg(F.collect_list(F.struct("j", "cqv", "cnq")).alias("__cents"))
+
+
+def _probes_sql(nprobe: int, with_centroid: bool = False) -> str:
+    """The ``nprobe`` nearest centroids of row (qv, nq) as an array of
+    (d, j[, cqv]) structs in (d, j) order: exact int64 squared
+    distance, ties to lowest j. ONE F.expr string (array_sort over
+    structs, slice) — O(1) py4j round trips, see int_dot_sql.
+    ``with_centroid`` carries the centroid along; j is unique, so it
+    never decides the order."""
+    if nprobe < 1:
+        raise ValueError("nprobe must be >= 1")
+    extra = ", 'cqv', c.cqv" if with_centroid else ""
+    return (
+        "slice(array_sort(transform(__cents, "
+        f"c -> named_struct('d', {sq_dist_sql('qv', 'nq', 'c.cqv', 'c.cnq')}, "
+        f"'j', c.j{extra}))), 1, {nprobe})"
+    )
+
+
+def _nearest_cluster(
+    qd: DataFrame, cents: DataFrame, id_col: str, dist_col: str | None = None
+) -> DataFrame:
     """Assign each row of qd(id, qv, nq) to the nearest centroid in
     cents(j, cqv, cnq) — exact int64 squared distance, ties to lowest j.
 
@@ -366,20 +423,20 @@ def _nearest_cluster(qd: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
     ``array_min`` over (distance, j) structs gives the lexicographic
     argmin with the tie-break built in. No row fan-out, no shuffle —
     the alternative (crossJoin xk + groupBy-argmin) shuffles every
-    input row per Lloyd round.
+    input row per Lloyd round. ``dist_col`` also keeps the argmin's
+    distance (exactly ||qv - cqv||^2 of the home centroid).
     """
-    packed = cents.agg(F.collect_list(F.struct("j", "cqv", "cnq")).alias("__cents"))
     # ONE F.expr string — identical argmin expression tree, O(1) py4j
     # round trips (see int_dot_sql; this runs once per Lloyd round in
     # every kmeans consumer)
     best = F.expr(
         "array_min(transform(__cents, "
-        f"c -> named_struct('d', nq + c.cnq - 2 * {int_dot_sql('qv', 'c.cqv')}, "
-        "'j', c.j))).j"
-    )
-    return qd.crossJoin(F.broadcast(packed)).select(
-        id_col, "qv", "nq", best.alias("cluster")
-    )
+        f"c -> named_struct('d', {sq_dist_sql('qv', 'nq', 'c.cqv', 'c.cnq')}, "
+        "'j', c.j)))"
+    ).alias("__best")
+    out = qd.crossJoin(F.broadcast(_packed(cents))).select(id_col, "qv", "nq", best)
+    keep = [] if dist_col is None else [F.col("__best.d").alias(dist_col)]
+    return out.select(id_col, "qv", "nq", F.col("__best.j").alias("cluster"), *keep)
 
 
 def _update_centroids(assigned: DataFrame, dim: int) -> DataFrame:
@@ -479,12 +536,14 @@ def kmeans_lite_fit(
 
 
 def assign_clusters(
-    qd: DataFrame, cents: DataFrame, id_col: str = "vec_id"
+    qd: DataFrame, cents: DataFrame, id_col: str = "vec_id", dist_col: str | None = None
 ) -> DataFrame:
     """Home-cluster assignment (shuffle-free broadcast argmin) over a
     quantized (id, qv, nq) frame — the public face of the per-round
-    assignment step, for search-time use with ``kmeans_lite_fit``."""
-    return _nearest_cluster(qd, cents, id_col)
+    assignment step, for search-time use with ``kmeans_lite_fit``.
+    ``dist_col`` also keeps each row's squared distance to its home
+    centroid."""
+    return _nearest_cluster(qd, cents, id_col, dist_col)
 
 
 def kmeans_lite_clusters(
@@ -540,35 +599,15 @@ def ivf_topk(
     driver query does).
     """
     qd, cents = kmeans_lite_fit(df, id_col, vec_col, n_clusters, dim, rounds)
-    cand = _nearest_cluster(qd, cents, id_col).select(
-        F.col(id_col).alias("cand_id"),
-        F.col("qv").alias("qv_c"),
-        F.col("nq").alias("nq_c"),
-        "cluster",
+    cand = cand_side(_nearest_cluster(qd, cents, id_col), id_col)
+    probes = query_side(
+        probe_clusters(
+            qd.join(query_ids.select(id_col), id_col), cents, id_col, nprobe=nprobe
+        ),
+        id_col,
     )
-    probes = probe_clusters(
-        qd.join(query_ids.select(id_col), id_col), cents, id_col, nprobe=nprobe
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "cluster",
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(cand, "cluster")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            quantized_cosine(
-                int_dot(F.col("qv_q"), F.col("qv_c")), F.col("nq_q"), F.col("nq_c")
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
+    return rank_topk(
+        scored_cosine(F.broadcast(probes).join(cand, "cluster")), k, BY_COS
     )
 
 
@@ -598,25 +637,25 @@ def ivf_build_index(
     assignment pass, so the Lloyd rounds run exactly once (no lineage
     recompute across the two outputs)."""
     spark = df.sparkSession
+    # index-level facts for ops tooling (pq.index_health); the flat
+    # index stores exact vectors and SCORES cosine, so there is no
+    # l2/cosine build split to refuse — kind+shape only. rounds rides
+    # along (r13) so a retrain replays the build hyperparameters; the
+    # dataset schemas are recorded as each dataset is written.
+    meta = {"kind": "ivf", "n_clusters": n_clusters, "dim": dim, "rounds": rounds}
     qd, cents = kmeans_lite_fit(
         df, id_col, vec_col, n_clusters, dim, rounds, prequantized=prequantized
     )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    cents_l = spark.read.parquet(f"{path}/centroids")
-    assign_clusters(qd, cents_l, id_col).write.mode("overwrite").partitionBy(
-        "cluster"
-    ).parquet(f"{path}/lists")
-    # record index-level facts for ops tooling (pq.index_health); the
-    # flat index stores exact vectors and SCORES cosine, so there is
-    # no l2/cosine build split to refuse — kind+shape only. rounds
-    # rides along (r13) so a retrain replays the build hyperparameters.
-    from .pq import write_index_meta
-
-    write_index_meta(
-        spark,
-        path,
-        {"kind": "ivf", "n_clusters": n_clusters, "dim": dim, "rounds": rounds},
+    save_dataset(cents, path, "centroids", meta)
+    cents_l = load_dataset(spark, path, "centroids", meta)
+    save_dataset(
+        assign_clusters(qd, cents_l, id_col), path, "lists", meta,
+        partition_by=("cluster",),
     )
+    record_delta_schema(
+        meta, (id_col, "qv", "nq", "cluster"), ("lists",), ("cluster",)
+    )
+    write_index_meta(spark, path, meta)
 
 
 def ivf_search_index(
@@ -649,42 +688,14 @@ def ivf_search_index(
     and the allow-list never widens rows (duplicates in it are
     harmless); AQE broadcasts it while it fits and hash-joins beyond.
     Queries are NOT filtered — restrict ``queries`` upstream."""
-    cents = spark.read.parquet(f"{path}/centroids")
-    lists = spark.read.parquet(f"{path}/lists")
+    meta = read_index_meta(spark, path)
+    cents = load_dataset(spark, path, "centroids", meta)
+    lists = load_dataset(spark, path, "lists", meta)
     qd = with_quantized(queries, vec_col).select(id_col, "qv", "nq")
-    probes = probe_clusters(qd, cents, id_col, nprobe=nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "cluster",
-    )
-    cand = lists.select(
-        F.col(id_col).alias("cand_id"),
-        F.col("qv").alias("qv_c"),
-        F.col("nq").alias("nq_c"),
-        "cluster",
-    )
-    if filter_ids is not None:
-        cand = cand.join(
-            filter_ids.select(F.col(id_col).alias("cand_id")),
-            "cand_id",
-            "leftsemi",
-        )
-    scored = (
-        F.broadcast(probes)
-        .join(cand, "cluster")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            quantized_cosine(
-                int_dot(F.col("qv_q"), F.col("qv_c")), F.col("nq_q"), F.col("nq_c")
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
+    probes = query_side(probe_clusters(qd, cents, id_col, nprobe=nprobe), id_col)
+    cand = allowed_only(cand_side(lists, id_col), filter_ids, id_col)
+    return rank_topk(
+        scored_cosine(F.broadcast(probes).join(cand, "cluster")), k, BY_COS
     )
 
 

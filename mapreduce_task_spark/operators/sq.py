@@ -42,9 +42,29 @@ similarity-search extension family (SURVEY §2.6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .similarity import VALID_METRICS, with_quantized
+from .index_store import (
+    check_index_meta,
+    load_dataset,
+    record_delta_schema,
+    save_dataset,
+    write_index_meta,
+)
+from .pq import _refine_exact, _sub_dist_sql
+from .similarity import (
+    BY_APPROX,
+    VALID_METRICS,
+    allowed_only,
+    cand_side,
+    probe_clusters,
+    query_side,
+    rank_topk,
+    with_quantized,
+)
+
+# exact int64 squared L2 from the query grid vector to a decoded candidate
+_APPROX_D_SQL = _sub_dist_sql("qv_q", "__dv")
 
 SQ_LEVELS = 255  # 8-bit: codes in [0, 255]
 
@@ -316,8 +336,7 @@ def ivfsq_topk(
     in tests). ``refine=N`` exact-reranks an N*k shortlist on the
     original grid vectors (shared ``pq._refine_exact``)."""
     from .pinning import lazy_checkpoint_tiny
-    from .pq import _refine_exact, _sub_dist
-    from .similarity import assign_clusters, kmeans_lite_fit, probe_clusters
+    from .similarity import assign_clusters, kmeans_lite_fit
 
     qd, cents = kmeans_lite_fit(
         df, id_col, vec_col, n_clusters, dim, rounds, metric=metric
@@ -341,23 +360,14 @@ def ivfsq_topk(
         keep=["cand_id", "cluster"],
         per_list=per_list,
     )
-    probes = probe_clusters(
-        qd.join(query_ids.select(id_col), id_col), cents, id_col, nprobe=nprobe
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "cluster",
-    )
-    cvecs = assigned.select(
-        F.col(id_col).alias("cand_id"),
-        "cluster",
-        F.col("qv").alias("qv_c"),
-        F.col("nq").alias("nq_c"),
+    probes = query_side(
+        probe_clusters(
+            qd.join(query_ids.select(id_col), id_col), cents, id_col, nprobe=nprobe
+        ),
+        id_col,
     )
     return _ivfsq_score(
-        probes, codes, bounds, cvecs, k, refine, per_list,
-        _sub_dist, _refine_exact,
+        probes, codes, bounds, cand_side(assigned, id_col), k, refine, per_list
     )
 
 
@@ -369,8 +379,6 @@ def _ivfsq_score(
     k: int,
     refine: int,
     per_list: bool,
-    _sub_dist,
-    _refine_exact,
 ) -> DataFrame:
     """The shared IVF-SQ search tail (inline operator, persisted-index
     search, and streaming delta all funnel here so they cannot drift):
@@ -395,7 +403,7 @@ def _ivfsq_score(
                 "query_id",
                 "cand_id",
                 "cluster",
-                _sub_dist(F.col("qv_q"), F.col("__dv")).alias("approx_d"),
+                F.expr(_APPROX_D_SQL).alias("approx_d"),
             )
         )
 
@@ -403,13 +411,9 @@ def _ivfsq_score(
     scored = scored_side(sides[0])
     for extra in sides[1:]:
         scored = scored.unionByName(scored_side(extra))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d"), F.asc("cand_id")
-    )
-    ranked = scored.select("*", F.row_number().over(w).alias("rank"))
     if not refine:
-        return ranked.filter(F.col("rank") <= k)
-    shortlist = ranked.filter(F.col("rank") <= refine * k).drop("rank")
+        return rank_topk(scored, k, BY_APPROX)
+    shortlist = rank_topk(scored, refine * k, BY_APPROX).drop("rank")
     qvecs = probes.select("query_id", "qv_q", "nq_q").dropDuplicates(
         ["query_id"]
     )
@@ -444,25 +448,31 @@ def ivfsq_build_index(
         storage tradeoff, recorded in meta).
     Plus ``_INDEX_META.json`` (kind/metric/dim/n_clusters/per_list/
     store_vectors); search refuses metric/shape mismatches."""
-    from .pq import write_index_meta
     from .similarity import assign_clusters, kmeans_lite_fit
 
     spark = df.sparkSession
+    meta = {
+        "kind": "ivfsq",
+        "metric": metric,
+        "dim": dim,
+        "n_clusters": n_clusters,
+        "per_list": per_list,
+        "store_vectors": store_vectors,
+        "rounds": rounds,
+    }
     qd, cents = kmeans_lite_fit(
         df, id_col, vec_col, n_clusters, dim, rounds, metric=metric,
         prequantized=prequantized,
     )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    cents_l = spark.read.parquet(f"{path}/centroids")
+    save_dataset(cents, path, "centroids", meta)
+    cents_l = load_dataset(spark, path, "centroids", meta)
     assigned = assign_clusters(qd, cents_l, id_col)
     if store_vectors:
         # the vectors dataset IS the assigned frame: persist it first
         # and derive bounds + codes from the persisted copy, so the
         # assignment pass runs once
-        assigned.write.mode("overwrite").partitionBy("cluster").parquet(
-            f"{path}/vectors"
-        )
-        assigned = spark.read.parquet(f"{path}/vectors")
+        save_dataset(assigned, path, "vectors", meta, partition_by=("cluster",))
+        assigned = load_dataset(spark, path, "vectors", meta)
     else:
         from .pinning import lazy_checkpoint
 
@@ -471,27 +481,24 @@ def ivfsq_build_index(
         bounds = _per_list_bounds(assigned, cents_l, dim)
     else:
         bounds = _bounds_agg(assigned.select("qv"), dim)
-    bounds.write.mode("overwrite").parquet(f"{path}/bounds")
-    bounds_l = spark.read.parquet(f"{path}/bounds")
-    _encode_qv(
+    save_dataset(bounds, path, "bounds", meta)
+    bounds_l = load_dataset(spark, path, "bounds", meta)
+    codes = _encode_qv(
         assigned.select(id_col, "cluster", "qv"),
         bounds_l,
         keep=[id_col, "cluster"],
         per_list=per_list,
-    ).write.mode("overwrite").partitionBy("cluster").parquet(f"{path}/codes")
-    write_index_meta(
-        spark,
-        path,
-        {
-            "kind": "ivfsq",
-            "metric": metric,
-            "dim": dim,
-            "n_clusters": n_clusters,
-            "per_list": per_list,
-            "store_vectors": store_vectors,
-            "rounds": rounds,
-        },
     )
+    save_dataset(codes, path, "codes", meta, partition_by=("cluster",))
+    record_delta_schema(
+        meta,
+        (id_col, "cluster", "qv", "nq", "codes")
+        if store_vectors
+        else (id_col, "cluster", "codes"),
+        ("vectors", "codes") if store_vectors else ("codes",),
+        ("cluster",),
+    )
+    write_index_meta(spark, path, meta)
 
 
 def ivfsq_search_index(
@@ -517,52 +524,51 @@ def ivfsq_search_index(
     left-semi-filters candidates AFTER the pruned scan (the
     package-wide filtered-search contract); ``refine>0`` refuses
     loudly on a ``store_vectors=False`` index."""
-    from .pq import _refine_exact, _sub_dist, check_index_meta, read_index_meta
-    from .similarity import probe_clusters
+    return _ivfsq_serve(
+        spark, path, queries, id_col, vec_col, k, dim, nprobe, metric,
+        refine, filter_ids, who="ivfsq_search_index",
+    )
 
-    check_index_meta(spark, path, metric=metric, dim=dim, kind="ivfsq")
-    meta = read_index_meta(spark, path) or {}
+
+def _ivfsq_serve(
+    spark, path, queries, id_col, vec_col, k, dim, nprobe, metric, refine,
+    filter_ids, delta_of=None, who="ivfsq_search_index",
+) -> DataFrame:
+    """The persisted IVF-SQ search, shared with the streaming delta
+    search: ``delta_of(meta)`` returns the delta log's live view (or
+    None), whose rows are scored beside the base code lists and, with
+    ``refine``, reranked beside the base vectors."""
+    meta = check_index_meta(spark, path, metric=metric, dim=dim, kind="ivfsq")
     per_list = bool(meta.get("per_list", False))
-    cents = spark.read.parquet(f"{path}/centroids")
-    bounds = spark.read.parquet(f"{path}/bounds")
-    codes = spark.read.parquet(f"{path}/codes").select(
-        F.col(id_col).alias("cand_id"), "cluster", "codes"
-    )
-    if filter_ids is not None:
-        codes = codes.join(
-            filter_ids.select(F.col(id_col).alias("cand_id")),
-            "cand_id",
-            "leftsemi",
+    if refine and not meta.get("store_vectors", True):
+        raise ValueError(
+            f"IVF-SQ index at {path} was built store_vectors=False — "
+            "it cannot serve refine>0; rebuild with store_vectors=True "
+            "or search with refine=0"
         )
+    cents = load_dataset(spark, path, "centroids", meta)
+    bounds = load_dataset(spark, path, "bounds", meta)
+    delta = None if delta_of is None else delta_of(meta)
+    sides = [load_dataset(spark, path, "codes", meta)]
+    if delta is not None:
+        sides.append(delta)
+    codes = [
+        allowed_only(
+            c.selectExpr(f"{id_col} AS cand_id", "cluster", "codes"), filter_ids, id_col
+        )
+        for c in sides
+    ]
     qd = with_quantized(queries, vec_col, metric=metric).select(
-        id_col,
-        _assert_dim(F.col("qv"), F.lit(dim), "ivfsq_search_index").alias("qv"),
-        "nq",
+        id_col, _assert_dim(F.col("qv"), F.lit(dim), who).alias("qv"), "nq"
     )
-    probes = probe_clusters(qd, cents, id_col, nprobe=nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "cluster",
-    )
+    probes = query_side(probe_clusters(qd, cents, id_col, nprobe=nprobe), id_col)
     cvecs = None
     if refine:
-        if not meta.get("store_vectors", True):
-            raise ValueError(
-                f"IVF-SQ index at {path} was built store_vectors=False — "
-                "it cannot serve refine>0; rebuild with store_vectors=True "
-                "or search with refine=0"
-            )
-        cvecs = spark.read.parquet(f"{path}/vectors").select(
-            F.col(id_col).alias("cand_id"),
-            "cluster",
-            F.col("qv").alias("qv_c"),
-            F.col("nq").alias("nq_c"),
-        )
-    return _ivfsq_score(
-        probes, codes, bounds, cvecs, k, refine, per_list,
-        _sub_dist, _refine_exact,
-    )
+        vectors = load_dataset(spark, path, "vectors", meta)
+        if delta is not None:
+            vectors = vectors.unionByName(delta.select(*vectors.columns))
+        cvecs = cand_side(vectors, id_col)
+    return _ivfsq_score(probes, codes, bounds, cvecs, k, refine, per_list)
 
 
 def sq_build_index(
@@ -589,29 +595,20 @@ def sq_build_index(
     Plus the shared ``_INDEX_META.json`` (kind/metric/dim/
     store_vectors); ``sq_search_index`` refuses a metric mismatch
     exactly like the IVF-PQ family."""
-    from .pq import write_index_meta
-
     spark = df.sparkSession
-    bounds = sq_fit(df, id_col, vec_col, dim, metric=metric)
-    bounds.write.mode("overwrite").parquet(f"{path}/bounds")
-    bounds_l = spark.read.parquet(f"{path}/bounds")
-    sq_encode(df, bounds_l, id_col, vec_col, metric=metric).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/codes")
-    if store_vectors:
-        with_quantized(df, vec_col, metric=metric).select(
-            id_col, "qv", "nq"
-        ).write.mode("overwrite").parquet(f"{path}/vectors")
-    write_index_meta(
-        spark,
-        path,
-        {
-            "kind": "sq8",
-            "metric": metric,
-            "dim": dim,
-            "store_vectors": store_vectors,
-        },
+    meta = {"kind": "sq8", "metric": metric, "dim": dim, "store_vectors": store_vectors}
+    save_dataset(sq_fit(df, id_col, vec_col, dim, metric=metric), path, "bounds", meta)
+    bounds_l = load_dataset(spark, path, "bounds", meta)
+    save_dataset(
+        sq_encode(df, bounds_l, id_col, vec_col, metric=metric), path, "codes", meta
     )
+    if store_vectors:
+        vectors = with_quantized(df, vec_col, metric=metric).select(id_col, "qv", "nq")
+        save_dataset(vectors, path, "vectors", meta)
+        record_delta_schema(meta, (id_col, "qv", "nq", "codes"), ("vectors", "codes"))
+    else:
+        record_delta_schema(meta, (id_col, "codes"), ("codes",))
+    write_index_meta(spark, path, meta)
 
 
 def sq_search_index(
@@ -636,37 +633,46 @@ def sq_search_index(
     ``store_vectors=False``. ``filter_ids`` pre-filters candidates
     (left-semi on the id before scoring, the package-wide filtered-
     search contract)."""
-    from .pq import check_index_meta, read_index_meta
+    return _sq_serve(
+        spark, path, queries, id_col, vec_col, k, dim, metric, refine, filter_ids,
+        who="sq_search_index",
+    )
 
+
+def _sq_serve(
+    spark, path, queries, id_col, vec_col, k, dim, metric, refine, filter_ids,
+    delta_of=None, who="sq_search_index",
+) -> DataFrame:
+    """The persisted flat-SQ8 search, shared with the streaming delta
+    search: ``delta_of(meta)`` returns the delta log's live view (or
+    None), unioned with the base codes and, with ``refine``, with the
+    base vectors."""
     # kind is checked too: an IVF-SQ index shares this layout's dataset
     # names (bounds/codes), and flat-scoring per-list bounds would
     # silently duplicate and mis-rank candidates
-    check_index_meta(spark, path, metric=metric, dim=dim, kind="sq8")
-    bounds = spark.read.parquet(f"{path}/bounds")
-    cand = spark.read.parquet(f"{path}/codes").select(
-        F.col(id_col).alias("cand_id"), "codes"
-    )
-    if filter_ids is not None:
-        cand = cand.join(
-            filter_ids.select(F.col(id_col).alias("cand_id")),
-            "cand_id",
-            "leftsemi",
+    meta = check_index_meta(spark, path, metric=metric, dim=dim, kind="sq8")
+    if refine and not meta.get("store_vectors", True):
+        raise ValueError(
+            f"SQ index at {path} was built store_vectors=False — it "
+            "cannot serve refine>0; rebuild with store_vectors=True "
+            "or search with refine=0"
         )
+    bounds = load_dataset(spark, path, "bounds", meta)
+    delta = None if delta_of is None else delta_of(meta)
+    cand = load_dataset(spark, path, "codes", meta).select(id_col, "codes")
+    if delta is not None:
+        cand = cand.unionByName(delta.select(id_col, "codes"))
+    cand = allowed_only(
+        cand.withColumnRenamed(id_col, "cand_id"), filter_ids, id_col
+    )
     qd = with_quantized(queries, vec_col, metric=metric).select(
-        id_col,
-        _assert_dim(F.col("qv"), F.lit(dim), "sq_search_index").alias("qv"),
-        "nq",
+        id_col, _assert_dim(F.col("qv"), F.lit(dim), who).alias("qv"), "nq"
     )
     vectors = None
     if refine:
-        meta = read_index_meta(spark, path) or {}
-        if not meta.get("store_vectors", True):
-            raise ValueError(
-                f"SQ index at {path} was built store_vectors=False — it "
-                "cannot serve refine>0; rebuild with store_vectors=True "
-                "or search with refine=0"
-            )
-        vectors = spark.read.parquet(f"{path}/vectors")
+        vectors = load_dataset(spark, path, "vectors", meta).select(id_col, "qv", "nq")
+        if delta is not None:
+            vectors = vectors.unionByName(delta.select(id_col, "qv", "nq"))
     return _sq_flat_score(qd, cand, bounds, id_col, k, refine, vectors)
 
 
@@ -685,13 +691,7 @@ def _sq_flat_score(
     exact int64 squared L2 to the exact query grid vectors, optional
     exact rerank against ``vectors`` (an (id, qv, nq) frame — required
     when ``refine>0``)."""
-    from .pq import _refine_exact, _sub_dist
-
-    qb = F.broadcast(
-        qd.select(
-            F.col(id_col).alias("query_id"), F.col("qv").alias("qv_q")
-        )
-    )
+    qb = F.broadcast(qd.selectExpr(f"{id_col} AS query_id", "qv AS qv_q"))
     scored = (
         cand.crossJoin(F.broadcast(bounds))
         .select("cand_id", _sq_decoded().alias("__dv"))
@@ -699,24 +699,13 @@ def _sq_flat_score(
         .select(
             "query_id",
             "cand_id",
-            _sub_dist(F.col("qv_q"), F.col("__dv")).alias("approx_d"),
+            F.expr(_APPROX_D_SQL).alias("approx_d"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d"), F.asc("cand_id")
-    )
-    ranked = scored.select("*", F.row_number().over(w).alias("rank"))
     if not refine:
-        return ranked.filter(F.col("rank") <= k)
-    qvecs = qd.select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
+        return rank_topk(scored, k, BY_APPROX)
+    shortlist = rank_topk(scored, refine * k, BY_APPROX).drop("rank")
+    qvecs = query_side(qd, id_col, keep=())
+    return _refine_exact(
+        shortlist, qvecs, cand_side(vectors, id_col, keep=()), k, on=["cand_id"]
     )
-    cvecs = vectors.select(
-        F.col(id_col).alias("cand_id"),
-        F.col("qv").alias("qv_c"),
-        F.col("nq").alias("nq_c"),
-    )
-    shortlist = ranked.filter(F.col("rank") <= refine * k).drop("rank")
-    return _refine_exact(shortlist, qvecs, cvecs, k, on=["cand_id"])

@@ -14,7 +14,7 @@ query uses a demonstration threshold of 0.35.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.hashing import affine_minhash_duckdb_sql, hash64_duckdb_sql
 from ..operators.dedup import (
@@ -33,8 +33,12 @@ from ..operators.pinning import lazy_checkpoint, lazy_checkpoint_tiny
 from ..operators.similarity import (
     blocked_all_pairs_cosine,
     brute_force_topk,
-    int_dot,
-    quantized_cosine,
+    BY_COS,
+    cand_side,
+    query_side,
+    rank_topk,
+    scored_cosine,
+    sq_dist_sql,
     srp_buckets,
     with_quantized,
 )
@@ -600,27 +604,17 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("int").alias("rank"),
     )
     qd = with_quantized(emb, metric="cosine").select("vec_id", "qv", "nq")
-    q = F.broadcast(
-        qd.join(qids, "vec_id").select(
-            F.col("vec_id").alias("query_id"),
-            F.col("qv").alias("qv_q"),
-            F.col("nq").alias("nq_q"),
-        )
-    )
-    c = qd.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("qv").alias("qv_c"),
-        F.col("nq").alias("nq_c"),
-    )
-    dcol = (
-        F.col("nq_q") + F.col("nq_c") - 2 * int_dot(F.col("qv_q"), F.col("qv_c"))
-    ).cast("bigint")
-    w = Window.partitionBy("query_id").orderBy(F.asc("d"), F.asc("cand_id"))
+    q = F.broadcast(query_side(qd.join(qids, "vec_id"), "vec_id", ()))
+    c = cand_side(qd, "vec_id", ())
+    dcol = F.expr(f"CAST({sq_dist_sql('qv_q', 'nq_q', 'qv_c', 'nq_c')} AS BIGINT)")
     unit_leg = (
-        q.join(c, F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", dcol.alias("d"))
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOPK_K)
+        rank_topk(
+            q.join(c, F.col("cand_id") != F.col("query_id")).select(
+                "query_id", "cand_id", dcol.alias("d")
+            ),
+            _TOPK_K,
+            "d ASC, cand_id ASC",
+        )
         .select(
             F.lit("unitgrid").alias("leg"),
             "query_id",
@@ -789,8 +783,16 @@ WHERE rank <= {_TOPK_K}
     "exhaustive-probe == flat-SQ pytest equality).",
 )
 def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.pq import _refine_exact, _sub_dist
-    from ..operators.similarity import assign_clusters, kmeans_lite_fit, probe_clusters
+    from ..operators.similarity import (
+        BY_COS,
+        assign_clusters,
+        cand_side,
+        kmeans_lite_fit,
+        probe_clusters,
+        query_side,
+        rank_topk,
+        scored_cosine,
+    )
     from ..operators.sq import _encode_qv, _ivfsq_score, _per_list_bounds
 
     emb = t(spark, sf_dir, "embeddings")
@@ -807,37 +809,16 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vectors): one lazy checkpoint materializes the broadcast-argmin
     # pass once instead of replanning it per consumer
     assigned = lazy_checkpoint(assign_clusters(qd, cents))
-    c = assigned.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("qv").alias("qv_c"),
-        F.col("nq").alias("nq_c"),
-        "cluster",
+    c = cand_side(assigned, "vec_id")
+    q = query_side(
+        probe_clusters(
+            qd.filter(F.col("vec_id") < _N_QUERIES), cents, nprobe=_IVF_NPROBE
+        ),
+        "vec_id",
     )
-    q = probe_clusters(
-        qd.filter(F.col("vec_id") < _N_QUERIES), cents, nprobe=_IVF_NPROBE
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "cluster",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cluster")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            quantized_cosine(
-                int_dot(F.col("qv_q"), F.col("qv_c")), F.col("nq_q"), F.col("nq_c")
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
     nul_b = F.lit(None).cast("bigint")
     ivf_leg = (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _TOPK_K)
+        rank_topk(scored_cosine(F.broadcast(q).join(c, "cluster")), _TOPK_K, BY_COS)
         .select(
             F.lit("ivf").alias("leg"),
             "query_id",
@@ -861,10 +842,7 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # c already IS the (cand_id, qv_c, nq_c, cluster) projection the
     # refine stage wants — reuse it rather than re-projecting assigned
-    ivfsq_leg = _ivfsq_score(
-        q, codes, bounds, c, _TOPK_K, _SQ_REFINE, True,
-        _sub_dist, _refine_exact,
-    ).select(
+    ivfsq_leg = _ivfsq_score(q, codes, bounds, c, _TOPK_K, _SQ_REFINE, True).select(
         F.lit("ivfsq").alias("leg"),
         "query_id",
         "cand_id",
@@ -936,34 +914,9 @@ def q_similarity_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     # dim passed explicitly: no driver-side .first() job at plan-build time
     bk = srp_buckets(emb, nbits=_SRP_BITS, dim=_EMB_DIM)
-    q = bk.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "bucket",
-    )
-    c = bk.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("qv").alias("qv_c"),
-        F.col("nq").alias("nq_c"),
-        "bucket",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            quantized_cosine(
-                int_dot(F.col("qv_q"), F.col("qv_c")), F.col("nq_q"), F.col("nq_c")
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= _TOPK_K
-    )
+    q = query_side(bk.filter(F.col("vec_id") < _N_QUERIES), "vec_id", ("bucket",))
+    c = cand_side(bk, "vec_id", ("bucket",))
+    return rank_topk(scored_cosine(F.broadcast(q).join(c, "bucket")), _TOPK_K, BY_COS)
 
 
 # ---------------------------------------------------------------------------

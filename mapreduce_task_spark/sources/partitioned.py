@@ -21,11 +21,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], dynamic: bool = True
 ) -> None:
-    """Write (or dynamically overwrite) a hive-partitioned dataset."""
-    spark = df.sparkSession
-    if dynamic:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+    """Write (or dynamically overwrite) a hive-partitioned dataset.
+    The mode is this write's own option: ``dynamic=False`` replaces the
+    whole dataset whatever the session's overwrite mode, and neither
+    choice changes the session."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic" if dynamic else "static"
+    ).partitionBy(*partition_cols).parquet(path)
 
 
 def with_date_partition(df: DataFrame, ts_col: str = "ts", out_col: str = "dt") -> DataFrame:

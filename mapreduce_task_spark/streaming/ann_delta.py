@@ -75,7 +75,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.pq import index_list_stats, ivfpq_build_index, read_index_meta
+from ..operators.index_store import load_dataset, read_index_meta, recorded_schema
+from ..operators.pq import index_list_stats, ivfpq_build_index
 from ..operators.similarity import ivf_build_index
 from ..operators.sq import ivfsq_build_index
 from .batchlog import (
@@ -177,29 +178,24 @@ def index_logs(kind: str, index_path: str) -> list[str]:
 
 def land_batch(
     kind: str, index_path: str, batch_id: int, rows: DataFrame, monitors: dict
-) -> None:
+) -> bool:
     """Write one batch's delta rows in the family's layout, then each
     ``{log: row}`` monitor row, every write into the batch's own
-    partition."""
-    write_batch_partition(
+    partition. Returns whether the delta partition was written (False
+    for a skipped replay, see ``batchlog.write_batch_partition``)."""
+    wrote = write_batch_partition(
         rows, batch_id, f"{index_path}/delta",
         sub_partition_cols=FAMILIES[kind].layout,
     )
     for log, row in monitors.items():
         write_batch_partition(row, batch_id, f"{index_path}/{log}")
+    return wrote
 
 
-def allowed_only(
-    cand: DataFrame, filter_ids: DataFrame | None, id_col: str
-) -> DataFrame:
-    """Restrict ``cand_id`` candidates to the ``filter_ids`` allow-list
-    (the package-wide filtered-search contract, applied on base and
-    delta alike); no-op when None."""
-    if filter_ids is None:
-        return cand
-    return cand.join(
-        filter_ids.select(F.col(id_col).alias("cand_id")), "cand_id", "leftsemi"
-    )
+def delta_live(spark: SparkSession, index_path: str, meta: dict) -> DataFrame | None:
+    """The delta log's live view (``batchlog.log_live``), read with the
+    schema the meta records for it; None while nothing is appended."""
+    return log_live(spark, f"{index_path}/delta", recorded_schema(meta, "delta"))
 
 
 def compact_delta(spark: SparkSession, index_path: str, up_to_batch: int) -> int:
@@ -213,6 +209,7 @@ def compact_delta(spark: SparkSession, index_path: str, up_to_batch: int) -> int
         up_to_batch,
         lambda live: live.drop(BATCH_COL),
         sub_partition_cols=("cluster",),
+        schema=recorded_schema(index_meta(spark, index_path), "delta"),
     )
 
 
@@ -233,14 +230,18 @@ def merge_delta_into_base(spark: SparkSession, index_path: str) -> int:
 
     def write_merged(live: DataFrame, name: str) -> None:
         # each base dataset holds its own column subset of the delta
-        # rows — align before the union
-        base = spark.read.parquet(f"{index_path}/{name}")
+        # rows — align before the union. The merged dataset has the
+        # base's schema, so the recorded one stays valid after the swap.
+        base = load_dataset(spark, index_path, name, meta)
         base.unionByName(live.select(*base.columns)).write.mode(
             "overwrite"
-        ).partitionBy(*fam.layout).parquet(f"{index_path}/{name}_merged")
+        ).option("partitionOverwriteMode", "static").partitionBy(
+            *fam.layout
+        ).parquet(f"{index_path}/{name}_merged")
 
     return merge_log_into_base(
-        spark, index_path, "delta", fam.targets(meta), write_merged
+        spark, index_path, "delta", fam.targets(meta), write_merged,
+        schema=recorded_schema(meta, "delta"),
     )
 
 

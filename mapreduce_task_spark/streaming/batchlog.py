@@ -24,16 +24,26 @@ The protocol, in full:
   space reclamation and both crash windows read-safe.
 
 At 100 TB the listing in ``batch_ids`` stays metadata-sized: one id
-per micro-batch or compaction, read from partition directory names
-(never the data), and compaction exists precisely to keep that count
-bounded.
+per micro-batch or compaction, parsed from the partition directory
+names of the file listing Spark makes when the log is opened (no Spark
+job, never the data), and compaction exists precisely to keep that
+count bounded.
+
+Every write here overwrites dynamically through the write's own
+``partitionOverwriteMode`` option, never the session conf, so no other
+write in the session changes mode.
 """
 
 from __future__ import annotations
 
+import re
+
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType
 
 BATCH_COL = "__batch"
+_BATCH_DIR = re.compile(rf"/{BATCH_COL}=(-?\d+)/")
 
 
 def log_exists(spark, path: str) -> bool:
@@ -55,9 +65,15 @@ def log_exists(spark, path: str) -> bool:
 
 
 def batch_ids(log: DataFrame) -> list[int]:
-    """Distinct ``__batch`` ids — a partition-column listing, no data
-    read (bounded: one id per micro-batch/compaction)."""
-    return [r[0] for r in log.select(BATCH_COL).distinct().collect()]
+    """The ``__batch`` ids of the partitions holding data files, in
+    ascending order — parsed from ``log.inputFiles()``, the file
+    listing Spark already made when the log was opened: no Spark job,
+    no data read (bounded: one id per micro-batch/compaction). Same ids
+    as a ``distinct()`` over the partition column: a partition without
+    data files holds no rows."""
+    return sorted(
+        {int(ids[-1]) for f in log.inputFiles() if (ids := _BATCH_DIR.findall(f))}
+    )
 
 
 def covered_watermark(ids: list[int]) -> int:
@@ -77,14 +93,43 @@ def live_view(log: DataFrame, covered: int) -> DataFrame:
     )
 
 
-def log_live(spark, path: str) -> DataFrame | None:
+def read_log(spark, path: str, schema=None) -> DataFrame:
+    """Open the log at ``path``, with ``schema`` when the writer
+    recorded one (no schema-inference job), else through inference.
+    A log holding a ``__batch`` id the recorded type cannot hold (an
+    int recorded, an id beyond int range appended since) is read
+    through inference: with the schema, Spark refuses the partition
+    value, or reads it as NULL when
+    ``spark.sql.sources.validatePartitionColumns`` is off."""
+    if schema is not None:
+        try:
+            log = spark.read.schema(schema).parquet(path)
+        except PySparkException as e:
+            if e.getCondition() != "INVALID_PARTITION_VALUE":
+                raise
+        else:
+            if BATCH_COL not in schema.names or _ids_fit(
+                schema[BATCH_COL].dataType, batch_ids(log)
+            ):
+                return log
+    return spark.read.parquet(path)
+
+
+def _ids_fit(dtype, ids: list[int]) -> bool:
+    if not isinstance(dtype, IntegerType):
+        return True
+    return all(-(2**31) <= b < 2**31 for b in ids)
+
+
+def log_live(spark, path: str, schema=None) -> DataFrame | None:
     """The log's exactly-once live view, or None when no readable
     ``__batch=`` partition exists — the read-side one-liner every
     delta-log consumer (IVF, IVF-PQ, BM25 ingest search paths) shares,
-    so the watermark/coverage discipline cannot drift per consumer."""
+    so the watermark/coverage discipline cannot drift per consumer.
+    ``schema`` as in ``read_log``."""
     if not log_exists(spark, path):
         return None
-    log = spark.read.parquet(path)
+    log = read_log(spark, path, schema)
     return live_view(log, covered_watermark(batch_ids(log)))
 
 
@@ -244,9 +289,16 @@ def _write_merged_watermark(spark, path: str, up_to: int) -> None:
     _WM_CACHE[_watermark_path(path)] = up_to
 
 
+def _overwrite_partitions(df: DataFrame, path: str, partition_cols) -> None:
+    """Replace exactly the partitions ``df`` holds rows for."""
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        *partition_cols
+    ).parquet(path)
+
+
 def write_batch_partition(
     df: DataFrame, batch_id: int, path: str, sub_partition_cols: tuple = ()
-) -> None:
+) -> bool:
     """(Over)write exactly partition ``__batch=<batch_id>`` with
     ``df``'s rows. ``batch_id`` must be non-negative — the negative id
     space belongs to compaction. ``sub_partition_cols`` adds physical
@@ -265,7 +317,8 @@ def write_batch_partition(
     unaffected. Contract: like the positive/negative id split, this
     assumes one checkpoint lineage per log — a FRESH checkpoint
     against an already-merged index must not reuse folded batch ids
-    (they would read as replays and be dropped)."""
+    (they would read as replays and be dropped). Returns whether the
+    partition was written (False for a skipped replay)."""
     if batch_id < 0:
         raise ValueError(
             f"batch_id must be >= 0 (got {batch_id}); negative ids are "
@@ -290,18 +343,22 @@ def write_batch_partition(
             RuntimeWarning,
             stacklevel=2,
         )
-        return
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        df.withColumn(BATCH_COL, F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .partitionBy(BATCH_COL, *sub_partition_cols)
-        .parquet(path)
+        return False
+    _overwrite_partitions(
+        df.withColumn(BATCH_COL, F.lit(int(batch_id))),
+        path,
+        (BATCH_COL, *sub_partition_cols),
     )
+    return True
 
 
 def compact_log(
-    spark, path: str, up_to_batch: int, fold, sub_partition_cols: tuple = ()
+    spark,
+    path: str,
+    up_to_batch: int,
+    fold,
+    sub_partition_cols: tuple = (),
+    schema=None,
 ) -> int:
     """The shared compaction skeleton: fold every live partition with
     ``__batch <= up_to_batch`` into the compacted partition
@@ -313,6 +370,7 @@ def compact_log(
     names the log's physical layout (``write_batch_partition``) and
     must survive the fold; a name the log has no column for is skipped,
     so one call serves cluster-partitioned and flat logs alike.
+    ``schema`` as in ``read_log``.
 
     Crash/replay safety (id-space protocol, module docstring):
 
@@ -353,7 +411,7 @@ def compact_log(
             "re-run merge_delta_into_base to finish recovery before "
             "compacting this log"
         )
-    log = spark.read.parquet(path)
+    log = read_log(spark, path, schema)
     sub_partition_cols = [c for c in sub_partition_cols if c in log.columns]
     ids = batch_ids(log)
     covered = covered_watermark(ids)
@@ -365,7 +423,6 @@ def compact_log(
         b for b in ids if (0 <= b <= effective) or (b < 0 and b != target)
     ]
     if effective > covered:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         merged = (
             fold(
                 live_view(log, covered).filter(
@@ -378,9 +435,7 @@ def compact_log(
             # path the fold reads from
             .localCheckpoint()
         )
-        merged.write.mode("overwrite").partitionBy(
-            BATCH_COL, *sub_partition_cols
-        ).parquet(path)
+        _overwrite_partitions(merged, path, (BATCH_COL, *sub_partition_cols))
     elif not superseded:
         return 0
     return drop_partitions(spark, path, superseded)
@@ -483,7 +538,7 @@ def remove_log_dir_if_empty(spark, log_path: str) -> None:
 
 
 def merge_log_into_base(
-    spark, index_path: str, log_subdir: str, targets: list, write_merged
+    spark, index_path: str, log_subdir: str, targets: list, write_merged, schema=None
 ) -> int:
     """The shared OFFLINE segment-merge skeleton: fold the delta log's
     live view into one or more base datasets, then drop exactly the
@@ -527,8 +582,9 @@ def merge_log_into_base(
     stopped, searches paused or staleness-tolerant); what the protocol
     guarantees is that NO merge ever reads a base missing committed
     merged rows, and codes/vectors-style multi-dataset bases can never
-    end half-swapped after recovery. Returns the merged live row
-    count (0 for resume/no-op)."""
+    end half-swapped after recovery. ``schema`` reads the log as in
+    ``read_log``. Returns the merged live row count (0 for
+    resume/no-op)."""
     import json
 
     jvm = spark._jvm
@@ -614,7 +670,7 @@ def merge_log_into_base(
         ):
             finish([])
         return 0
-    log = spark.read.parquet(log_path)
+    log = read_log(spark, log_path, schema)
     ids = batch_ids(log)
     live = live_view(log, covered_watermark(ids)).drop(BATCH_COL)
     n = live.count()

@@ -20,16 +20,22 @@ supplies the IVF-Flat codec pieces:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from ..operators.index_store import load_dataset
 from ..operators.similarity import (
+    BY_COS,
+    allowed_only,
     assign_clusters,
-    int_dot,
+    cand_side,
     probe_clusters,
-    quantized_cosine,
+    query_side,
+    rank_topk,
+    scored_cosine,
+    sq_dist_sql,
     with_quantized,
 )
-from .ann_delta import allowed_only, index_logs, land_batch
+from .ann_delta import delta_live, index_logs, index_meta, land_batch
 from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
     compact_delta,
     compact_drift,
@@ -39,7 +45,16 @@ from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
     read_drift_trend,
     reset_drift,
 )
-from .batchlog import attach_batch_sink, log_live
+from .batchlog import attach_batch_sink, write_batch_partition
+
+
+def _drift_aggs(dist_col: str) -> list:
+    """The drift row (see ann_delta): exact sums across rows,
+    decimal(38,0) so corpus-scale sums cannot overflow int64."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col(dist_col).cast("decimal(38,0)")).alias("sum_assign_d"),
+    ]
 
 
 def append_batch(
@@ -54,21 +69,38 @@ def append_batch(
     """Assign one (micro-)batch of embeddings to the index's frozen
     centroids and land it in the delta log's own batch partition,
     sub-partitioned by cluster. ``drift=True`` (default) also lands one
-    mergeable drift-monitor row for the batch — one extra map-only pass
-    + 1-row aggregate, replay-idempotent like the delta write itself.
-    ``prequantized=True`` takes (id, qv, nq) rows (the retrain carry
-    path)."""
+    mergeable drift-monitor row for the batch, replay-idempotent like
+    the delta write itself. Its sums ride the delta write as observed
+    metrics over the assignment's own argmin distance, so the batch is
+    read, quantized and assigned once; only a skipped replay (no delta
+    write) aggregates the batch separately. ``prequantized=True`` takes
+    (id, qv, nq) rows (the retrain carry path)."""
     spark = batch_df.sparkSession
-    cents = spark.read.parquet(f"{index_path}/centroids")
+    meta = index_meta(spark, index_path)
+    cents = load_dataset(spark, index_path, "centroids", meta)
     if prequantized:
         qd = batch_df.select(id_col, "qv", "nq")
     else:
         qd = with_quantized(batch_df, vec_col).select(id_col, "qv", "nq")
-    assigned = assign_clusters(qd, cents, id_col)
-    land_batch(
-        "ivf", index_path, batch_id, assigned,
-        {"drift": _ivf_drift_row(assigned, cents)} if drift else {},
-    )
+    assigned = assign_clusters(qd, cents, id_col, dist_col="__d")
+    rows = assigned
+    if drift:
+        seen = Observation()
+        rows = assigned.observe(seen, *_drift_aggs("__d"))
+    wrote = land_batch("ivf", index_path, batch_id, rows.drop("__d"), {})
+    if drift:
+        if wrote:
+            # a one-row frame planned in the JVM (createDataFrame from
+            # Python rows would start a Python worker to write it)
+            got = seen.get
+            total = "NULL" if got["sum_assign_d"] is None else f"{got['sum_assign_d']:f}"
+            row = spark.range(1).selectExpr(
+                f"CAST({got['n']} AS BIGINT) AS n",
+                f"CAST({total} AS DECIMAL(38,0)) AS sum_assign_d",
+            )
+        else:
+            row = assigned.agg(*_drift_aggs("__d"))
+        write_batch_partition(row, batch_id, f"{index_path}/drift")
 
 
 def streaming_ivf_append(
@@ -109,66 +141,35 @@ def search_with_delta(
     independently; the merged candidates feed one top-k window.
     ``filter_ids`` pre-filters candidates on BOTH sides to an
     allow-list before scoring."""
-    cents = spark.read.parquet(f"{index_path}/centroids")
+    meta = index_meta(spark, index_path)
+    cents = load_dataset(spark, index_path, "centroids", meta)
     qd = with_quantized(queries, vec_col).select(id_col, "qv", "nq")
-    probes = probe_clusters(qd, cents, id_col, nprobe=nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "cluster",
+    probes = F.broadcast(
+        query_side(probe_clusters(qd, cents, id_col, nprobe=nprobe), id_col)
     )
 
     def scored(lists: DataFrame) -> DataFrame:
-        cand = lists.select(
-            F.col(id_col).alias("cand_id"),
-            F.col("qv").alias("qv_c"),
-            F.col("nq").alias("nq_c"),
-            "cluster",
-        )
-        return (
-            F.broadcast(probes)
-            .join(allowed_only(cand, filter_ids, id_col), "cluster")
-            .filter(F.col("cand_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "cand_id",
-                quantized_cosine(
-                    int_dot(F.col("qv_q"), F.col("qv_c")),
-                    F.col("nq_q"),
-                    F.col("nq_c"),
-                ).alias("cos"),
-            )
-        )
+        cand = allowed_only(cand_side(lists, id_col), filter_ids, id_col)
+        return scored_cosine(probes.join(cand, "cluster"))
 
-    cand_scored = scored(spark.read.parquet(f"{index_path}/lists"))
-    delta = log_live(spark, f"{index_path}/delta")
+    cand_scored = scored(load_dataset(spark, index_path, "lists", meta))
+    delta = delta_live(spark, index_path, meta)
     if delta is not None:
         cand_scored = cand_scored.unionByName(scored(delta))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return cand_scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(cand_scored, k, BY_COS)
 
 
 def _ivf_drift_row(assigned: DataFrame, cents: DataFrame) -> DataFrame:
-    """(n, sum_assign_d) over an assigned (id, qv, nq, cluster) frame —
-    map-only against the broadcast k-row quantizer, then one 1-row
-    aggregate. decimal(38,0) across rows so corpus-scale sums cannot
-    overflow int64."""
-    from ..operators.pq import _sub_dist
-
-    cj = cents.select(F.col("j").alias("cluster"), "cqv")
+    """(n, sum_assign_d) over an assigned (id, qv, nq, cluster) frame,
+    each row's distance to its home centroid taken as the assignment
+    takes it — map-only against the broadcast k-row quantizer, then one
+    1-row aggregate."""
+    cj = cents.selectExpr("j AS cluster", "cqv", "cnq")
+    dist = sq_dist_sql("qv", "nq", "cqv", "cnq")
     return (
         assigned.join(F.broadcast(cj), "cluster")
-        .select(
-            _sub_dist(F.col("qv"), F.col("cqv"))
-            .cast("decimal(38,0)")
-            .alias("__ad")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("__ad").alias("sum_assign_d"),
-        )
+        .select(F.expr(dist).alias("__d"))
+        .agg(*_drift_aggs("__d"))
     )
 
 
@@ -178,8 +179,9 @@ def drift_baseline(spark: SparkSession, index_path: str) -> None:
     raw corpus is never rescanned). Run once after ``ivf_build_index``
     or a retrain — after a retrain, ``reset_drift`` FIRST (old rows
     measured under the old quantizer poison the new ratios)."""
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    lists = spark.read.parquet(f"{index_path}/lists")
+    meta = index_meta(spark, index_path)
+    cents = load_dataset(spark, index_path, "centroids", meta)
+    lists = load_dataset(spark, index_path, "lists", meta)
     _ivf_drift_row(lists, cents).write.mode("overwrite").parquet(
         f"{index_path}/drift_base"
     )

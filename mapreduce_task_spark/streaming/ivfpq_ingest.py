@@ -27,16 +27,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.index_store import load_dataset
 from ..operators.pq import (
-    _ivfpq_adc_scored,
-    _rank_topk_by_distance,
-    _refine_stage,
-    _vectors_as_cvecs,
+    _RESIDUAL_SQL,
+    _ivfpq_serve,
+    _sorted_book,
+    _sub_dist_sql,
     check_index_meta,
     ivfpq_encode_batch,
 )
-from ..operators.similarity import probe_clusters, with_quantized
-from .ann_delta import allowed_only, index_logs, land_batch
+from ..operators.similarity import allowed_only
+from .ann_delta import delta_live, index_logs, index_meta, land_batch
 from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
     compact_delta,
     compact_drift,
@@ -45,7 +46,7 @@ from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
     read_drift_trend,
     reset_drift,
 )
-from .batchlog import attach_batch_sink, log_live
+from .batchlog import attach_batch_sink
 
 
 def append_batch(
@@ -78,11 +79,11 @@ def append_batch(
     population either way, and a replay overwrites its own drift
     partition with identical numbers (deterministic encode)."""
     spark = batch_df.sparkSession
-    check_index_meta(
+    meta = check_index_meta(
         spark, index_path, metric=metric, m=m, dim=dim, per_list=per_list
     )
-    coarse = spark.read.parquet(f"{index_path}/coarse")
-    cents = spark.read.parquet(f"{index_path}/codebook")
+    coarse = load_dataset(spark, index_path, "coarse", meta)
+    cents = load_dataset(spark, index_path, "codebook", meta)
     rows = ivfpq_encode_batch(
         batch_df, coarse, cents, id_col, vec_col, m=m, dim=dim,
         per_list=per_list, metric=metric, prequantized=prequantized,
@@ -155,46 +156,22 @@ def search_with_delta(
     streamed-in rows alike."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    check_index_meta(
+    meta = check_index_meta(
         spark, index_path, metric=metric, m=m, dim=dim, per_list=per_list
     )
-    coarse = spark.read.parquet(f"{index_path}/coarse")
-    cents = spark.read.parquet(f"{index_path}/codebook")
 
-    qd = with_quantized(queries, vec_col, metric=metric).select(id_col, "qv", "nq")
-    cj = coarse.select(F.col("j").alias("cluster"), "cqv")
-    rq = (
-        probe_clusters(qd, coarse, id_col, nprobe=nprobe)
-        .join(F.broadcast(cj), "cluster")
-        .select(
-            F.col(id_col).alias("query_id"),
-            "cluster",
-            F.zip_with("qv", "cqv", lambda a, b: a - b).alias("qv"),
-        )
-    )
+    def cand(lists: DataFrame) -> DataFrame:
+        c = lists.select(F.col(id_col).alias("cand_id"), "cluster", "codes")
+        return allowed_only(c, filter_ids, id_col)
 
-    def scored(lists: DataFrame) -> DataFrame:
-        cand = lists.select(F.col(id_col).alias("cand_id"), "cluster", "codes")
-        return _ivfpq_adc_scored(
-            allowed_only(cand, filter_ids, id_col), rq, cents, m, dsub,
-            per_list=per_list,
-        )
-
-    cand_scored = scored(spark.read.parquet(f"{index_path}/codes"))
-    delta = log_live(spark, f"{index_path}/delta")
+    cands = [cand(load_dataset(spark, index_path, "codes", meta))]
+    delta = delta_live(spark, index_path, meta)
     if delta is not None:
-        cand_scored = cand_scored.unionByName(scored(delta))
-    if refine:
-        cvecs = _vectors_as_cvecs(
-            spark.read.parquet(f"{index_path}/vectors"), id_col
-        )
-        if delta is not None:
-            cvecs = cvecs.unionByName(
-                _vectors_as_cvecs(delta.select(id_col, "cluster", "qv", "nq"), id_col)
-            )
-        return _refine_stage(cand_scored, qd, cvecs, id_col, k, refine)
-    return _rank_topk_by_distance(cand_scored, k).drop("cluster")
+        cands.append(cand(delta))
+    return _ivfpq_serve(
+        spark, index_path, meta, queries, cands, id_col, vec_col, k, nprobe,
+        m, dim, per_list, refine, metric, extra_vectors=delta,
+    )
 
 
 def _drift_stats_row(
@@ -213,45 +190,30 @@ def _drift_stats_row(
     reconstruction error ADC rankings degrade with). Map-only against the two
     broadcast tables the encode already used, then a 1-row aggregate —
     O(batch) work, nothing new touches the base index."""
-    from ..operators.pq import _sub_dist
-
     cj = coarse.select(F.col("j").alias("cluster"), "cqv")
-    if per_list:
-        packed = cents.agg(
-            F.array_sort(
-                F.collect_list(F.struct("cluster", "sub", "j", "cqv"))
-            ).alias("__cb")
-        )
-        book = F.filter(F.col("__cb"), lambda c: c["cluster"] == F.col("cluster"))
-    else:
-        packed = cents.agg(
-            F.array_sort(F.collect_list(F.struct("sub", "j", "cqv"))).alias("__cb")
-        )
-        book = F.col("__cb")
+    packed, book = _sorted_book(cents, per_list)
     pre = (
         encoded.join(F.broadcast(cj), "cluster")
         .crossJoin(F.broadcast(packed))
-        .select(
-            _sub_dist(F.col("qv"), F.col("cqv")).alias("__ad"),
-            F.zip_with("qv", "cqv", lambda a, b: a - b).alias("__rv"),
+        .selectExpr(
+            f"{_sub_dist_sql('qv', 'cqv')} AS __ad",
+            f"{_RESIDUAL_SQL} AS __rv",
             "codes",
-            book.alias("__bk"),
+            f"{book} AS __bk",
         )
     )
-    nsub = (F.size("__bk") / F.lit(m)).cast("int")
-
-    def err(s: int):
-        entry = F.element_at(
-            "__bk", (nsub * s + F.element_at("codes", s + 1)).cast("int")
+    # code s of subspace s sits at position s * nsub + code in the book
+    nsub = f"CAST(size(__bk) / {m} AS INT)"
+    qerr = " + ".join(
+        _sub_dist_sql(
+            f"slice(__rv, {s * dsub + 1}, {dsub})",
+            f"element_at(__bk, CAST({nsub} * {s} + element_at(codes, {s + 1}) AS INT)).cqv",
         )
-        return _sub_dist(F.slice("__rv", s * dsub + 1, dsub), entry["cqv"])
-
-    qerr = err(0)
-    for s in range(1, m):
-        qerr = qerr + err(s)
-    return pre.select(
-        F.col("__ad").cast("decimal(38,0)").alias("__ad"),
-        qerr.cast("decimal(38,0)").alias("__qe"),
+        for s in range(m)
+    )
+    return pre.selectExpr(
+        "CAST(__ad AS DECIMAL(38,0)) AS __ad",
+        f"CAST({qerr} AS DECIMAL(38,0)) AS __qe",
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("__ad").alias("sum_assign_d"),
@@ -282,10 +244,11 @@ def drift_baseline(
     artifact that would silently survive.)"""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    coarse = spark.read.parquet(f"{index_path}/coarse")
-    cents = spark.read.parquet(f"{index_path}/codebook")
-    vectors = spark.read.parquet(f"{index_path}/vectors")
-    codes = spark.read.parquet(f"{index_path}/codes").select(id_col, "codes")
+    meta = index_meta(spark, index_path)
+    coarse = load_dataset(spark, index_path, "coarse", meta)
+    cents = load_dataset(spark, index_path, "codebook", meta)
+    vectors = load_dataset(spark, index_path, "vectors", meta)
+    codes = load_dataset(spark, index_path, "codes", meta).select(id_col, "codes")
     encoded = vectors.join(codes, id_col)
     _drift_stats_row(encoded, coarse, cents, m, dim // m, per_list).write.mode(
         "overwrite"

@@ -8,8 +8,8 @@ this module supplies the IVF-SQ codec pieces. TWO frozen quantizers
 govern an append here, and each has its monitor:
 
 - the coarse k-means centroids (as in ``ivf_ingest``): each batch is
-  assigned by one broadcast argmin and lands the assignment-distance
-  ``drift`` row (``ivf_ingest._ivf_drift_row``);
+  assigned by one broadcast argmin and lands the ``drift`` row summed
+  over that argmin's own distance (``ivf_ingest._drift_aggs``);
 - the SQ bounds (1-row global or k-row per-list): each batch encodes
   map-only against them and lands the ``sat`` clamp-count row
   (``sq_ingest._sat_row_from_joined``; per-list bounds join on
@@ -26,9 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.similarity import assign_clusters, probe_clusters, with_quantized
-from ..operators.sq import _assert_dim, _codes_expr
-from .ann_delta import allowed_only, index_logs, index_meta, land_batch
+from ..operators.index_store import load_dataset
+from ..operators.similarity import assign_clusters, with_quantized
+from ..operators.sq import _assert_dim, _codes_expr, _ivfsq_serve
+from .ann_delta import delta_live, index_logs, index_meta, land_batch
 from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
     compact_delta,
     compact_drift,
@@ -41,8 +42,8 @@ from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
     reset_saturation,
     saturation_signal,
 )
-from .batchlog import attach_batch_sink, log_live
-from .ivf_ingest import _ivf_drift_row
+from .batchlog import attach_batch_sink
+from .ivf_ingest import _drift_aggs, _ivf_drift_row
 from .sq_ingest import _sat_row_from_joined
 
 
@@ -71,15 +72,15 @@ def append_batch(
         )
     metric = meta.get("metric", "l2")
     per_list = bool(meta.get("per_list", False))
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    bounds = spark.read.parquet(f"{index_path}/bounds")
+    cents = load_dataset(spark, index_path, "centroids", meta)
+    bounds = load_dataset(spark, index_path, "bounds", meta)
     if prequantized:
         qd = batch_df.select(id_col, "qv", "nq")
     else:
         qd = with_quantized(batch_df, vec_col, metric=metric).select(
             id_col, "qv", "nq"
         )
-    assigned = assign_clusters(qd, cents, id_col)
+    assigned = assign_clusters(qd, cents, id_col, dist_col="__d")
     if per_list:
         joined = assigned.join(F.broadcast(bounds), "cluster")
     else:
@@ -101,7 +102,7 @@ def append_batch(
     land_batch(
         "ivfsq", index_path, batch_id, rows,
         {
-            "drift": _ivf_drift_row(assigned, cents),
+            "drift": assigned.agg(*_drift_aggs("__d")),
             "sat": _sat_row_from_joined(joined),
         }
         if monitors
@@ -147,62 +148,11 @@ def search_with_delta(
     ``refine`` reranks against base ∪ delta vectors and refuses on a
     ``store_vectors=False`` index; ``filter_ids`` pre-filters
     candidates on both sides."""
-    from ..operators.pq import _refine_exact, _sub_dist, check_index_meta
-    from ..operators.sq import _ivfsq_score
-
-    check_index_meta(spark, index_path, metric=metric, dim=dim, kind="ivfsq")
-    meta = index_meta(spark, index_path)
-    per_list = bool(meta.get("per_list", False))
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    bounds = spark.read.parquet(f"{index_path}/bounds")
-    delta = log_live(spark, f"{index_path}/delta")
-
-    def side(df: DataFrame) -> DataFrame:
-        c = df.select(F.col(id_col).alias("cand_id"), "cluster", "codes")
-        return allowed_only(c, filter_ids, id_col)
-
-    sides = [side(spark.read.parquet(f"{index_path}/codes"))]
-    if delta is not None:
-        sides.append(side(delta))
-    qd = with_quantized(queries, vec_col, metric=metric).select(
-        id_col,
-        _assert_dim(F.col("qv"), F.lit(dim), "ivfsq_search_with_delta").alias(
-            "qv"
-        ),
-        "nq",
-    )
-    probes = probe_clusters(qd, cents, id_col, nprobe=nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col("qv").alias("qv_q"),
-        F.col("nq").alias("nq_q"),
-        "cluster",
-    )
-    cvecs = None
-    if refine:
-        if not meta.get("store_vectors", True):
-            raise ValueError(
-                f"IVF-SQ index at {index_path} was built store_vectors=False "
-                "— it cannot serve refine>0; rebuild with store_vectors=True "
-                "or search with refine=0"
-            )
-        cvecs = spark.read.parquet(f"{index_path}/vectors").select(
-            F.col(id_col).alias("cand_id"),
-            "cluster",
-            F.col("qv").alias("qv_c"),
-            F.col("nq").alias("nq_c"),
-        )
-        if delta is not None:
-            cvecs = cvecs.unionByName(
-                delta.select(
-                    F.col(id_col).alias("cand_id"),
-                    "cluster",
-                    F.col("qv").alias("qv_c"),
-                    F.col("nq").alias("nq_c"),
-                )
-            )
-    return _ivfsq_score(
-        probes, sides, bounds, cvecs, k, refine, per_list,
-        _sub_dist, _refine_exact,
+    return _ivfsq_serve(
+        spark, index_path, queries, id_col, vec_col, k, dim, nprobe, metric,
+        refine, filter_ids,
+        delta_of=lambda meta: delta_live(spark, index_path, meta),
+        who="ivfsq_search_with_delta",
     )
 
 
@@ -218,8 +168,8 @@ def drift_baseline(spark: SparkSession, index_path: str) -> None:
             f"IVF-SQ index at {index_path} was built store_vectors=False — "
             "drift_baseline needs the persisted vectors dataset"
         )
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    vectors = spark.read.parquet(f"{index_path}/vectors")
+    cents = load_dataset(spark, index_path, "centroids", meta)
+    vectors = load_dataset(spark, index_path, "vectors", meta)
     _ivf_drift_row(vectors, cents).write.mode("overwrite").parquet(
         f"{index_path}/drift_base"
     )

@@ -40,14 +40,19 @@ from .batchlog import (
     write_batch_partition,
 )
 
-_MERGE = [
-    F.sum("n_rows").alias("n_rows"),
-    F.sum("n_null_text").alias("n_null_text"),
-    F.sum("n_null_id").alias("n_null_id"),
-    F.sum("n_tokens").alias("n_tokens"),
-    F.sum("n_chars").alias("n_chars"),
-    F.hll_union_agg("hll_text").alias("hll_text"),
-]
+def _merge() -> list:
+    """The pure-merge fold of metric rows: counters sum, sketches
+    union. Built per call — Columns need an active session, and
+    building them at import would make importing this module (or
+    ``streaming.crawl``) fail without one."""
+    return [
+        F.sum("n_rows").alias("n_rows"),
+        F.sum("n_null_text").alias("n_null_text"),
+        F.sum("n_null_id").alias("n_null_id"),
+        F.sum("n_tokens").alias("n_tokens"),
+        F.sum("n_chars").alias("n_chars"),
+        F.hll_union_agg("hll_text").alias("hll_text"),
+    ]
 
 
 def batch_quality_row(
@@ -128,12 +133,12 @@ def read_quality_total(spark: SparkSession, path: str) -> DataFrame:
     live = log_live(spark, path)
     if live is None:
         raise FileNotFoundError(f"no quality log at {path}")
-    return _rates(live.agg(*_MERGE))
+    return _rates(live.agg(*_merge()))
 
 
 def compact_quality(spark: SparkSession, path: str, up_to_batch: int) -> int:
     """Fold metric rows ``__batch <= up_to_batch`` into the negative-id
     partition by pure merge (sums + HLL union)."""
     return compact_log(
-        spark, path, up_to_batch, lambda live: live.agg(*_MERGE)
+        spark, path, up_to_batch, lambda live: live.agg(*_merge())
     )

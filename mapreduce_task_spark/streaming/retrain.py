@@ -74,12 +74,14 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.index_store import load_dataset
 from .ann_delta import (
     FAMILIES,
     Family,
     drift_signal,
     family_of,
     index_logs,
+    delta_live,
     index_meta,
     meta_knobs,
     saturation_signal,
@@ -89,7 +91,6 @@ from .batchlog import (
     drop_logs,
     invalidate_watermark_cache,
     log_exists,
-    log_live,
 )
 
 VERSIONS_DIR = "_versions"
@@ -229,8 +230,8 @@ def _corpus_and_carry(
             f"index at {cur} was built store_vectors=False — codes "
             "alone cannot seed a retrain; rebuild with store_vectors=True"
         )
-    base = spark.read.parquet(f"{cur}/{fam.corpus}").select(id_col, "qv", "nq")
-    delta = log_live(spark, f"{cur}/delta")
+    base = load_dataset(spark, cur, fam.corpus, meta).select(id_col, "qv", "nq")
+    delta = delta_live(spark, cur, meta)
     if delta is None:
         return base, None
     if "qv" not in delta.columns:

@@ -26,9 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.index_store import load_dataset
 from ..operators.similarity import with_quantized
-from ..operators.sq import _assert_dim, _codes_expr, _sq_flat_score
-from .ann_delta import allowed_only, index_logs, index_meta, land_batch
+from ..operators.sq import _assert_dim, _codes_expr, _sq_serve
+from .ann_delta import delta_live, index_logs, index_meta, land_batch
 from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
     compact_delta,
     compact_saturation,
@@ -37,7 +38,7 @@ from .ann_delta import (  # noqa: F401 — the shared protocol, re-exported
     reset_saturation,
     saturation_signal,
 )
-from .batchlog import attach_batch_sink, log_live
+from .batchlog import attach_batch_sink
 
 
 def append_batch(
@@ -64,7 +65,7 @@ def append_batch(
             "to flat SQ8 indexes only (use ivfsq_ingest for IVF-SQ)"
         )
     metric = meta.get("metric", "l2")
-    bounds = spark.read.parquet(f"{index_path}/bounds")
+    bounds = load_dataset(spark, index_path, "bounds", meta)
     qd = with_quantized(batch_df, vec_col, metric=metric).select(
         id_col, "qv", "nq"
     )
@@ -124,41 +125,12 @@ def search_with_delta(
     ``store_vectors=False`` index; ``filter_ids`` pre-filters
     candidates on both sides before scoring (the package-wide
     filtered-search contract)."""
-    from ..operators.pq import check_index_meta
-
-    check_index_meta(spark, index_path, metric=metric, dim=dim, kind="sq8")
-    meta = index_meta(spark, index_path)
-    bounds = spark.read.parquet(f"{index_path}/bounds")
-    cand = spark.read.parquet(f"{index_path}/codes").select(
-        F.col(id_col).alias("cand_id"), "codes"
+    return _sq_serve(
+        spark, index_path, queries, id_col, vec_col, k, dim, metric, refine,
+        filter_ids,
+        delta_of=lambda meta: delta_live(spark, index_path, meta),
+        who="sq_search_with_delta",
     )
-    delta = log_live(spark, f"{index_path}/delta")
-    if delta is not None:
-        cand = cand.unionByName(
-            delta.select(F.col(id_col).alias("cand_id"), "codes")
-        )
-    cand = allowed_only(cand, filter_ids, id_col)
-    qd = with_quantized(queries, vec_col, metric=metric).select(
-        id_col,
-        _assert_dim(F.col("qv"), F.lit(dim), "sq_search_with_delta").alias(
-            "qv"
-        ),
-        "nq",
-    )
-    vectors = None
-    if refine:
-        if not meta.get("store_vectors", True):
-            raise ValueError(
-                f"SQ index at {index_path} was built store_vectors=False — "
-                "it cannot serve refine>0; rebuild with store_vectors=True "
-                "or search with refine=0"
-            )
-        vectors = spark.read.parquet(f"{index_path}/vectors").select(
-            id_col, "qv", "nq"
-        )
-        if delta is not None:
-            vectors = vectors.unionByName(delta.select(id_col, "qv", "nq"))
-    return _sq_flat_score(qd, cand, bounds, id_col, k, refine, vectors)
 
 
 def _sat_row_from_joined(joined: DataFrame) -> DataFrame:

@@ -62,7 +62,6 @@ def upsert_batch(
     """Merge one (micro-)batch into the bucketed parquet target.
     Usable directly for batch backfills and as the foreachBatch body."""
     spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     fresh = latest_per_key(batch_df, key_col, order_cols).withColumn(
         BUCKET_COL, F.pmod(F.hash(key_col), F.lit(num_buckets))
     )
@@ -76,7 +75,11 @@ def upsert_batch(
         merged = latest_per_key(existing.unionByName(fresh), key_col, order_cols)
     else:
         merged = fresh
-    merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
+    # dynamic: replace only the touched buckets (this write's own
+    # option — the session's overwrite mode is left alone)
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(BUCKET_COL).parquet(path)
 
 
 def streaming_upsert(

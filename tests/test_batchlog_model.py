@@ -87,3 +87,51 @@ def test_batchlog_views_match_reference_model(spark, tmp_path_factory, ops):
             want = set().union(set(), *model[:b])
             assert got == want, f"read_before({b}): {got} != {want}"
     shutil.rmtree(path, ignore_errors=True)
+
+
+def test_listed_batch_ids_match_a_distinct_scan_without_a_job(spark, tmp_path):
+    """``batch_ids`` parses the ids from the log's file listing. On the
+    states the model test walks — fresh batches, a replay, a
+    compaction, and a crashed compaction's leftovers (a shallower
+    negative partition and covered positives still on disk) — it
+    returns what a ``distinct()`` over the partition column returns,
+    and runs no Spark job."""
+    import os
+
+    path = str(tmp_path / "log")
+    sc = spark.sparkContext
+
+    def df(rows):
+        return spark.createDataFrame([(r,) for r in rows], "k int")
+
+    def check(want):
+        log = spark.read.parquet(path)
+        scanned = sorted(r[0] for r in log.select("__batch").distinct().collect())
+        sc.setJobGroup("batch_ids", "batch_ids")
+        try:
+            got = batch_ids(log)
+        finally:
+            sc.setJobGroup(None, None)
+        assert got == scanned == want
+        assert not sc.statusTracker().getJobIdsForGroup("batch_ids")
+
+    fold = lambda live: live.select("k").distinct()  # noqa: E731
+    for b in range(3):
+        write_batch_partition(df([b, b + 10]), b, path)
+    check([0, 1, 2])
+    write_batch_partition(df([1, 11]), 1, path)  # replay
+    check([0, 1, 2])
+    compact_log(spark, path, 1, fold)
+    check([-2, 2])
+    write_batch_partition(df([3]), 3, path)
+    # a crashed compaction: the deeper negative partition is written,
+    # cleanup never ran — the old negative and covered positives remain
+    keep = tmp_path / "keep"
+    for b in (-2, 2):
+        shutil.copytree(f"{path}/__batch={b}", keep / str(b))
+    compact_log(spark, path, 3, fold)
+    for b in (-2, 2):
+        os.rename(keep / str(b), f"{path}/__batch={b}")
+    write_batch_partition(df([1, 11]), 1, path)  # replay re-creates a covered id
+    check([-4, -2, 1, 2])
+    assert covered_watermark(batch_ids(spark.read.parquet(path))) == 3

@@ -416,3 +416,58 @@ def test_pq_encode_is_shuffle_free_map_projection(spark, sf_small):
     assert "Exchange rangepartitioning" not in plan, plan
     assert "BroadcastExchange" in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+
+
+def test_ann_serving_job_budget(spark, sf_small, tmp_path):
+    """The fixed Spark-job cost of each ANN request, counted by job
+    group on a tiny IVF index. Opening the index runs no job (recorded
+    schemas; delta batch ids from the file listing), so building a
+    search or delta-search DataFrame runs none and the action stays
+    within 5; an append runs at most 5 (its drift row rides the delta
+    write as observed metrics) and a compaction at most 2."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_task_spark.operators.similarity import (
+        ivf_build_index,
+        ivf_search_index,
+    )
+    from mapreduce_task_spark.sources.tables import load_table
+    from mapreduce_task_spark.streaming.ivf_ingest import (
+        append_batch,
+        compact_delta,
+        search_with_delta,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs(tag, fn):
+        group = f"job-budget/{tag}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    emb = load_table(spark, sf_small, "embeddings")
+    idx = str(tmp_path / "ivf")
+    ivf_build_index(emb.filter(F.col("vec_id") < 300), idx, n_clusters=8, dim=64)
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    batch = emb.filter(F.col("vec_id") >= 300)
+
+    got = {}
+
+    def request(tag, build):
+        df, got[f"{tag}.build"] = jobs(f"{tag}/build", build)
+        rows, got[f"{tag}.run"] = jobs(f"{tag}/run", df.collect)
+        assert rows
+
+    request("search", lambda: ivf_search_index(spark, idx, queries, k=10, nprobe=2))
+    _, got["append"] = jobs("append", lambda: append_batch(batch, 0, idx))
+    request("delta", lambda: search_with_delta(spark, idx, queries, k=10, nprobe=2))
+    _, got["compact"] = jobs("compact", lambda: compact_delta(spark, idx, 0))
+    budget = {
+        "search.build": 0, "search.run": 5, "append": 5,
+        "delta.build": 0, "delta.run": 5, "compact": 2,
+    }
+    assert all(got[k] <= budget[k] for k in budget), got

@@ -390,7 +390,7 @@ def test_ivf_index_build_search_split_matches_inline(spark, sf_small, tmp_path):
 
 def test_degenerate_embedding_contract(spark):
     """Pin the documented input contract for degenerate embeddings
-    (operators/similarity.py quantized_cosine):
+    (operators/similarity.py cosine_sql):
 
     - NULL embeddings propagate NULL cosine, which desc-sorts LAST:
       they rank strictly after every real candidate (and fall out of
