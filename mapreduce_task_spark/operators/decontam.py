@@ -157,9 +157,9 @@ def split_leakage(
     standard LSH bucket-join cost plus one band-keyed shuffle —
     content never rides the cross join.
 
-    ``pin`` materializes the shingle frame across its three consumers
-    (signature build + both verify sides); default None = no pinning
-    (see ``operators.pinning``).
+    ``pin`` materializes the shingle frame across its two consumers
+    (signature build + the verify's shingle-set aggregate); default
+    None = no pinning (see ``operators.pinning``).
     """
     from .dedup import (
         BANDS,

@@ -15,9 +15,10 @@ Scale design:
 - LSH banding turns near-dup search from O(n^2) pairs into an
   equi-join on (band, signature) — shuffle-partitioned by bucket,
   AQE splits skewed buckets. This is the only pair-producing join.
-- Candidate pairs are verified with exact shingle-set Jaccard, again
-  an equi-join on shingle + integer-only arithmetic (order-independent,
-  oracle-exact: int/int division is IEEE-deterministic).
+- Candidate pairs are verified with exact shingle-set Jaccard: one
+  per-document shingle-set aggregate joined on both pair ids, then
+  integer-only arithmetic (order-independent, oracle-exact: int/int
+  division is IEEE-deterministic).
 
 Hashes use functions.hashing.hash64 (md5-based) so DuckDB can replay
 them bit-for-bit; pass fast=True to swap in xxhash64 at scale.
@@ -25,7 +26,7 @@ them bit-for-bit; pass fast=True to swap in xxhash64 at scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from ..functions.hashing import (
     affine_minhash_spark_sqls,
@@ -39,7 +40,7 @@ from ..functions.text import (
     tokenize,
 )
 from ..sources.tables import ensure_parallelism
-from .pinning import Pin, no_pin as _no_pin
+from .pinning import Pin, no_pin as _no_pin, release_checkpoint
 
 NUM_HASHES = 16
 BANDS = 8  # 8 bands x 2 rows: P(candidate) = 1-(1-j^2)^8 -> 0.90 at j=0.5
@@ -195,28 +196,27 @@ def jaccard_verify(
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs.
 
-    Intersection via equi-join on shingle restricted to the candidate
-    pairs; |A| and |B| from one groupBy. jaccard = inter/(|A|+|B|-inter)
-    is an int/int divide — bitwise deterministic in every engine.
+    ``shingle_df`` holds distinct ``(id, shingle)`` rows, as
+    ``shingles()`` returns them, and the result is a set ratio. One
+    aggregate gathers each document's shingle set — the single scan of
+    ``shingle_df`` — and the pairs join it on both ids; the intersection
+    is ``size(array_intersect(sa, sb))``. jaccard = inter/(|A|+|B|-inter)
+    is an int/int divide — bitwise deterministic in every engine. A pair
+    that shares no shingle, or names an id absent from ``shingle_df``,
+    gets no row.
     """
-    sizes = shingle_df.groupBy(id_col).agg(F.count("*").alias("n"))
-    sa = shingle_df.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = shingle_df.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
+    sets = shingle_df.groupBy(id_col).agg(F.collect_set("shingle").alias("s"))
+    inter = F.size(F.array_intersect("sa", "sb"))
     return (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("na")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb")), "id_b")
+        pairs.join(sets.select(F.col(id_col).alias("id_a"), F.col("s").alias("sa")), "id_a")
+        .join(sets.select(F.col(id_col).alias("id_b"), F.col("s").alias("sb")), "id_b")
+        .filter(inter > 0)
         .select(
             "id_a",
             "id_b",
             (
-                F.col("inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")
+                inter.cast("double")
+                / (F.size("sa") + F.size("sb") - inter).cast("double")
             ).alias("jaccard"),
         )
     )
@@ -308,103 +308,95 @@ def connected_components(
     both over- and under-deletes on chains. This is the step between
     LSH pair generation and the delete-list.
 
-    Algorithm: iterative min-label propagation. Each round every
-    vertex takes the min of its own label and its neighbors' labels —
-    one edges-to-labels join + one min-aggregate per round, converging
-    in O(component diameter) rounds. Convergence is detected by the
-    strictly-decreasing sum of labels reaching a fixpoint (one cheap
-    1-row aggregate per round; labels are non-negative, so equal sum
-    <=> no label moved). Near-dup components are tiny and shallow in
-    practice; for adversarial diameters the alternating large-star/
-    small-star variant (Kiveris et al., O(log n) rounds) drops in with
-    the same join shape. Each round persists its labels and releases
-    the previous round's (bounded lineage, bounded storage).
+    Algorithm: iterative min-label propagation over a Pregel-style
+    vertex table (Malewicz et al., SIGMOD 2010): one row per vertex,
+    ``(v, label, nbrs)``, with the adjacency set stored next to the
+    state. A round explodes ``array_union([v], nbrs)`` once — every
+    neighbor gets a message carrying v's label, and v's own row also
+    carries ``nbrs`` and the old label — then one ``groupBy(v)`` takes
+    the min label and keeps the self row's adjacency. That is ONE
+    message shuffle per round, with no join against a separate edge
+    table; the per-round cost is two Spark jobs (the shuffle stage and
+    the materializing action). Convergence takes O(component diameter)
+    rounds; near-dup components are tiny and shallow in practice, and
+    for adversarial diameters the alternating large-star/small-star
+    variant (Kiveris et al., SoCC 2014, O(log n) rounds) drops in with
+    the same shuffle shape.
+
+    Each round pins its vertex table with ``localCheckpoint(eager=True)``
+    — the shuffle stage plus one materializing job, and a lineage cut,
+    so the plan does not grow with the round count. That same action
+    counts the labels it lowered through an ``Observation``; a round
+    that lowers none is the fixpoint. The previous round's blocks are
+    released once the new one exists (bounded storage). MEASURED
+    NEGATIVE: ``persist()`` plus a ``noop`` write costs 3 jobs per
+    round, not 2 — AQE materializes the cached relation as a query
+    stage of its own before the write reads it.
 
     The check deliberately runs EVERY round, not every 2nd: batching
-    it was measured 6x SLOWER (r7) — the skipped round's labels stay a
-    lazy persisted frame with two consumers in the next round's plan,
-    and an unmaterialized persist gives no sharing within the single
-    job that finally runs, so its join/aggregate shuffles execute
-    twice. One small action per round that materializes the round it
-    just built is the cheaper shape.
+    it was measured 6x SLOWER (r7) — a skipped round stays a lazy
+    frame with two consumers in the next round's plan, and an
+    unmaterialized frame gives no sharing within the single job that
+    finally runs, so its shuffles execute more than once. One action
+    per round that materializes the round it just built is the
+    cheaper shape.
 
     A driver action per round is inherent to iterative convergence —
     this operator is the documented exception to the no-driver-action
     rule, and ``max_rounds`` hard-bounds it.
     """
-    # symmetric edge set as ONE map-side explode of both orientations,
-    # not a self-union: the union's two branches each carried the whole
-    # upstream pair pipeline (typically LSH candidate generation +
-    # Jaccard verification) as a duplicated subtree, leaving it to
-    # exchange reuse to dedupe the heavy stages and re-running the
-    # post-shuffle tail twice in the job that populates this cache
-    # (r14, guide §2.4 — remove the duplicated subtree outright).
-    # Persisted: every round joins it, and without the cache each round
-    # would replay that pipeline from the scan.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(id_b).alias("src"), F.col(id_a).alias("dst")
-                    ),
-                )
-            ).alias("__e")
-        )
-        .select(F.col("__e.src").alias("src"), F.col("__e.dst").alias("dst"))
-        .persist()
+    # symmetric edge set as ONE map-side explode of both orientations
+    # (not a self-union, whose two branches would each carry the whole
+    # upstream pair pipeline), grouped straight into the vertex table.
+    # Fused round 0: the initial label least(v, min(nbrs)) is a
+    # projection of the adjacency aggregate that round 1's first stage
+    # evaluates, so the init runs no job of its own — the fixpoint, and
+    # the result, are those of the identity init one round later.
+    edges = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+            )
+        ).alias("__e")
+    ).select(F.col("__e.src").alias("src"), F.col("__e.dst").alias("dst"))
+    verts = (
+        edges.groupBy(F.col("src").alias("v"))
+        .agg(F.collect_set("dst").alias("nbrs"))
+        .select("v", F.least("v", F.array_min("nbrs")).alias("label"), "nbrs")
     )
-    # Fused round 0 (r13 optimization round): the initial labels are
-    # min(v, min of v's neighbors) computed in ONE edges scan —
-    # min over (least(src, dst) grouped by src) == min(self, all
-    # neighbors) because edges are symmetric and min is associative.
-    # The former identity init (label = v) spent its own job on
-    # distinct+sum and then needed one MORE full join round to reach
-    # this state; the fixpoint — and therefore the result — is
-    # identical, one propagation round cheaper. Single edges read in
-    # the init job, so the (possibly unmaterialized) edges cache is
-    # populated exactly once.
-    labels = (
-        edges.select(
-            F.col("src").alias("v"), F.least("src", "dst").alias("label")
-        )
-        .groupBy("v")
-        .agg(F.min("label").alias("label"))
-        .persist()
-    )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+    prev = None
     converged = False
     for _ in range(max_rounds):
-        # propagate-as-union: each vertex's candidate labels are its own
-        # plus every in-neighbor's, min-reduced in ONE aggregation. The
-        # older three-shuffle shape (edges⋈labels → groupBy(src) min →
-        # left-join back onto labels) spent a whole extra exchange
-        # re-keying the neighbor minima just to merge them with the self
-        # label; the union feeds both into the same groupBy, and the
-        # self-label side means vertices with no in-edges keep theirs
-        # without an outer join. Measured ~30% per-round (r8).
-        new_labels = (
-            edges.join(labels, edges.dst == labels.v)
-            .select(F.col("src").alias("v"), "label")
-            .unionAll(labels.select("v", "label"))
-            .groupBy("v")
-            .agg(F.min("label").alias("label"))
-            .persist()
+        msgs = verts.select(
+            F.explode(F.array_union(F.array("v"), F.col("nbrs"))).alias("u"),
+            "v",
+            "label",
+            "nbrs",
         )
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        if new_sum == prev_sum:
+        is_self = F.col("u") == F.col("v")
+        obs = Observation()
+        verts = (
+            msgs.groupBy(F.col("u").alias("v"))
+            .agg(
+                F.min("label").alias("label"),
+                F.max(F.when(is_self, F.col("nbrs"))).alias("nbrs"),
+                F.max(F.when(is_self, F.col("label"))).alias("__old"),
+            )
+            .observe(obs, F.count(F.when(F.col("label") < F.col("__old"), 1)).alias("n"))
+            .select("v", "label", "nbrs")
+            .localCheckpoint(eager=True)
+        )
+        if prev is not None:
+            release_checkpoint(prev)
+        prev = verts
+        if obs.get["n"] == 0:
             converged = True
             break
-        prev_sum = new_sum
     if not converged:
         # Unconverged labels split one true component into several —
         # duplicate_delete_list would then silently under-delete. The
-        # label-sum fixpoint check already detects this for free; make
+        # changed-label count already detects this for free; make
         # exhaustion loud instead of returning wrong components quietly.
         import warnings
 
@@ -416,13 +408,13 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    # truncate the r-round join lineage so the caller's action reads the
-    # materialized labels instead of replaying every round (at cluster
-    # scale use reliable checkpoint() instead: localCheckpoint blocks
-    # don't survive executor loss)
-    final = labels.localCheckpoint(eager=True)
-    labels.unpersist()
-    edges.unpersist()
+    # pin just (v, label), so the last round's adjacency blocks can be
+    # freed and the caller reads a narrow materialized frame (at
+    # cluster scale use reliable checkpoint() instead: localCheckpoint
+    # blocks don't survive executor loss)
+    final = verts.select("v", "label").localCheckpoint(eager=True)
+    if prev is not None:
+        release_checkpoint(prev)
     return final.select(F.col("v").alias("doc_id"), F.col("label").alias("component"))
 
 
@@ -729,12 +721,12 @@ def incremental_minhash_dedup(
         )
         known_sigs = spark.createDataFrame([], schema)
 
-    # the batch shingle set feeds the signature build AND the three
-    # scans inside jaccard_verify; the signature table feeds stage-1
-    # bands plus both stage-2 sides. Pin both (per the caller's pin
-    # policy) so each is derived once per ingest — the batch is small
-    # relative to the corpus by the ingest contract, and sig is
-    # num_hashes*8 bytes/doc (it IS the persisted state format).
+    # the batch shingle set feeds the signature build AND the
+    # shingle-set aggregate inside jaccard_verify; the signature table
+    # feeds stage-1 bands plus both stage-2 sides. Pin both (per the
+    # caller's pin policy) so each is derived once per ingest — the
+    # batch is small relative to the corpus by the ingest contract, and
+    # sig is num_hashes*8 bytes/doc (it IS the persisted state format).
     if pin is None:
         pin = _no_pin
     sh = pin(

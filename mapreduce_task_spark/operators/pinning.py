@@ -39,6 +39,7 @@ executor loss must not kill the job.
 from __future__ import annotations
 
 import os
+import threading
 from typing import Callable
 
 from pyspark import StorageLevel
@@ -69,6 +70,9 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
 # groups regardless of input rows — map-side partial aggregation
 # bounds what reaches it).
 _TINY_PARTITIONS = os.environ.get("SPARK_GRAFT_TINY_PIN_PARTITIONS", "8")
+_AQE = "spark.sql.adaptive.enabled"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_CONF_LOCK = threading.Lock()
 
 
 def lazy_checkpoint_tiny(df: DataFrame) -> DataFrame:
@@ -82,20 +86,28 @@ def lazy_checkpoint_tiny(df: DataFrame) -> DataFrame:
     scale-correct by construction: partial aggregation means at most
     #groups rows per map task reach these exchanges, independent of
     corpus size. SPARK_GRAFT_TINY_PIN_PARTITIONS overrides the clamp
-    (e.g. for thousands-of-lists per-list codebooks)."""
+    (e.g. for thousands-of-lists per-list codebooks).
+
+    Both confs are read and parsed before either changes, and set
+    inside the ``try``, so a bad value or a failed compile leaves the
+    session as it was. A module lock serializes the pins: two pins
+    compiling at once on two threads (a ``foreachBatch`` next to a
+    retrain) would otherwise record each other's temporary values as
+    the ones to restore. A query of another thread compiled meanwhile
+    still sees the temporary values; only a pin that changes no
+    session conf removes that."""
     spark = df.sparkSession
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(int(old_sp), int(_TINY_PARTITIONS))),
-    )
-    try:
-        return df.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    with _CONF_LOCK:
+        old_aqe = spark.conf.get(_AQE, "true")
+        old_sp = spark.conf.get(_SHUFFLE_PARTITIONS, "200")
+        tiny_sp = str(min(int(old_sp), int(_TINY_PARTITIONS)))
+        try:
+            spark.conf.set(_AQE, "false")
+            spark.conf.set(_SHUFFLE_PARTITIONS, tiny_sp)
+            return df.localCheckpoint(eager=False)
+        finally:
+            spark.conf.set(_AQE, old_aqe)
+            spark.conf.set(_SHUFFLE_PARTITIONS, old_sp)
 
 
 def disk_persist(df: DataFrame) -> DataFrame:
@@ -106,3 +118,14 @@ def disk_persist(df: DataFrame) -> DataFrame:
 def no_pin(df: DataFrame) -> DataFrame:
     """Identity: each consumer re-derives the frame from source."""
     return df
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a frame returned by ``localCheckpoint``.
+
+    ``DataFrame.unpersist`` does not reach them: the checkpointed RDD
+    sits under the frame's ``LogicalRDD``, outside the cache manager,
+    and is otherwise freed only when the JVM garbage-collects it. Pass
+    the frame ``localCheckpoint`` returned, not a projection of it, and
+    only once nothing will read it again."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -400,9 +400,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import incremental_minhash_dedup
 
     docs = t(spark, sf_dir, "documents")
-    # persist: the shingle set feeds the signature pipeline AND three
-    # scans inside jaccard_verify (sizes + both pair sides); at cluster
-    # scale this would be a DISK_ONLY persist or a checkpoint.
+    # persist: the shingle set feeds the signature pipeline AND the
+    # per-document shingle-set aggregate inside jaccard_verify; at
+    # cluster scale this would be a DISK_ONLY persist or a checkpoint.
     sh = _persist(shingles(docs))
     # ONE signature aggregation over the corpus; every later consumer
     # (pairs-leg bands, the historical table stand-in, the batch side

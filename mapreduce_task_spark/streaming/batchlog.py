@@ -42,6 +42,8 @@ from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType
 
+from ..operators.pinning import release_checkpoint
+
 BATCH_COL = "__batch"
 _BATCH_DIR = re.compile(rf"/{BATCH_COL}=(-?\d+)/")
 
@@ -435,7 +437,10 @@ def compact_log(
             # path the fold reads from
             .localCheckpoint()
         )
-        _overwrite_partitions(merged, path, (BATCH_COL, *sub_partition_cols))
+        try:
+            _overwrite_partitions(merged, path, (BATCH_COL, *sub_partition_cols))
+        finally:
+            release_checkpoint(merged)
     elif not superseded:
         return 0
     return drop_partitions(spark, path, superseded)

@@ -135,3 +135,24 @@ def test_listed_batch_ids_match_a_distinct_scan_without_a_job(spark, tmp_path):
     write_batch_partition(df([1, 11]), 1, path)  # replay re-creates a covered id
     check([-4, -2, 1, 2])
     assert covered_watermark(batch_ids(spark.read.parquet(path))) == 3
+
+
+def test_compact_log_releases_its_checkpoint(spark, tmp_path):
+    """The fold is pinned with ``localCheckpoint`` so it materializes
+    before the overwrite deletes what it reads; once written, its
+    blocks are freed, so a compaction leaves no persisted RDD behind.
+    Compared as id sets: a frame of an earlier test may be
+    garbage-collected meanwhile, which only shrinks the count."""
+    path = str(tmp_path / "log")
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    for b in range(3):
+        write_batch_partition(spark.createDataFrame([(b,), (b + 10,)], "k int"), b, path)
+    before = persisted()
+    compact_log(spark, path, 2, lambda live: live.select("k").distinct())
+    assert not persisted() - before
+    lv = live_view(spark.read.parquet(path), 2)
+    assert sorted(r["k"] for r in lv.select("k").collect()) == [0, 1, 2, 10, 11, 12]

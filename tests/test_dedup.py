@@ -61,6 +61,40 @@ def test_lsh_finds_identical_pair_only(spark):
     assert len(ver) == 1 and ver[0]["jaccard"] == 1.0
 
 
+_SHINGLE_SETS = st.dictionaries(
+    st.integers(0, 5),
+    st.sets(st.sampled_from(["a b c", "b c d", "c d e", "d e f", "x y z"]), min_size=1),
+    max_size=6,
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    sets=_SHINGLE_SETS,
+    pairs=st.sets(
+        st.tuples(st.integers(0, 6), st.integers(0, 6)).filter(lambda p: p[0] < p[1]),
+        max_size=10,
+    ),
+)
+def test_jaccard_verify_matches_python_set_jaccard(spark, sets, pairs):
+    """jaccard_verify over distinct (id, shingle) rows equals the Python
+    set ratio. Docs 8 and 9 share no shingle and id 7 has no shingles at
+    all: neither pair (8, 9) nor (0, 7) gets a row."""
+    sets = {**sets, 8: {"p q r"}, 9: {"s t u"}}
+    pairs = pairs | {(8, 9), (0, 7)}
+    sh = spark.createDataFrame(
+        [(i, x) for i, xs in sets.items() for x in xs], "doc_id bigint, shingle string"
+    )
+    pdf = spark.createDataFrame(sorted(pairs), "id_a bigint, id_b bigint")
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in jaccard_verify(pdf, sh).collect()}
+    want = {}
+    for a, b in pairs:
+        sa, sb = sets.get(a, set()), sets.get(b, set())
+        if sa & sb:
+            want[(a, b)] = len(sa & sb) / len(sa | sb)
+    assert got == want
+
+
 def test_all_pairs_jaccard_values(spark):
     # doc0 shingles {a b c, b c d}; doc1 {a b c}; inter=1, union=2 -> 0.5
     df = _docs(spark, ["a b c d", "a b c"])

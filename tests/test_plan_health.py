@@ -471,3 +471,58 @@ def test_ann_serving_job_budget(spark, sf_small, tmp_path):
         "delta.build": 0, "delta.run": 5, "compact": 2,
     }
     assert all(got[k] <= budget[k] for k in budget), got
+
+
+def test_near_dup_job_budget(spark, sf_small):
+    """The driver-synchronous job cost of near-dup dedup, counted by job
+    group. ``connected_components`` runs each label-propagation round as
+    one message shuffle plus the materializing action (2 jobs), so a
+    diameter-4 chain — 4 rounds with the fused init, the last confirming
+    the fixpoint — runs at most 2·4 + 2. The whole near-dup build over
+    the documents fixture (shingles, signatures, LSH candidates, the
+    verify and the delete list) stays within 14 jobs (12 measured): one
+    per shuffle stage and per round action. The earlier shape — a
+    three-scan join-and-count verify, and rounds of an edge join plus a
+    label-sum job — ran 20 here."""
+    from pyspark.sql import functions as F
+
+    from mapreduce_task_spark.operators.dedup import (
+        connected_components,
+        duplicate_delete_list,
+        jaccard_verify,
+        lsh_bands,
+        lsh_candidate_pairs,
+        minhash_signature,
+        shingles,
+    )
+    from mapreduce_task_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+
+    def jobs(tag, fn):
+        group = f"job-budget/{tag}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(4)], "id_a bigint, id_b bigint"
+    )
+    comp, n_chain = jobs("chain", lambda: connected_components(chain))
+    assert {r["component"] for r in comp.collect()} == {0}
+    assert n_chain <= 2 * 4 + 2, n_chain
+
+    docs = load_table(spark, sf_small, "documents")
+
+    def near_dup():
+        sh = shingles(docs)
+        cands = lsh_candidate_pairs(lsh_bands(minhash_signature(sh)))
+        verified = jaccard_verify(cands, sh).filter(F.col("jaccard") >= 0.5)
+        return duplicate_delete_list(verified.select("id_a", "id_b"))
+
+    dels, n_build = jobs("near_dup", near_dup)
+    assert dels.count() > 0  # the fixture holds near-duplicates
+    assert n_build <= 14, n_build
