@@ -17,6 +17,9 @@ Spark equivalents used here:
 - ``counted`` — named record counters via ``DataFrame.observe``:
   aggregated executor-side during the action, no extra job, the
   idiomatic Hadoop-counter replacement.
+- ``codegen_compiles`` — the JVM's count of generated classes Janino
+  has compiled so far; its delta over a call says whether the call
+  reused the generated-code cache (see ``session``).
 """
 
 from __future__ import annotations
@@ -157,3 +160,17 @@ def counted(df: DataFrame, observation: Observation, **counters: Column) -> Data
     """
     exprs = [expr.alias(name) for name, expr in counters.items()]
     return df.observe(observation, *exprs)
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled by this JVM so far (exact, monotone).
+
+    Read over py4j from Spark's ``CodegenMetrics`` source, whose
+    compilation-time histogram is updated once per Janino compile (a
+    generated-code cache hit does not touch it). The count is
+    JVM-wide: compiles by concurrent queries of other threads are
+    included.
+    """
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

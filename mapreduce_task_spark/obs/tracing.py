@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from ..plans.signature import plan_attributes
+from .metrics import codegen_compiles
 
 try:  # optional dependency — not installed in the test container
     from opentelemetry import trace as _otel_trace
@@ -71,9 +72,6 @@ def span(name: str, attributes: dict | None = None):
     s = Span(name=name, attributes=dict(attributes or {}), start_ns=time.time_ns())
     otel_cm = _TRACER.start_as_current_span(name) if _TRACER else None
     otel_span = otel_cm.__enter__() if otel_cm else None
-    if otel_span:
-        for k, v in s.attributes.items():
-            otel_span.set_attribute(k, v)
     try:
         yield s
         s.status = "OK"
@@ -83,6 +81,9 @@ def span(name: str, attributes: dict | None = None):
     finally:
         s.end_ns = time.time_ns()
         if otel_cm:
+            # set at exit, so attributes the body measured reach OTel too
+            for k, v in s.attributes.items():
+                otel_span.set_attribute(k, v)
             otel_cm.__exit__(None, None, None)
         _RECORDED.append(s)
 
@@ -93,7 +94,11 @@ def traced_action(df: DataFrame, job_kind: str, job_id: str | None = None):
 
     Sets the Spark job group/description so everything the action runs
     is attributable in the UI/status APIs, and stamps the plan-shape
-    attributes the reference stamps on its submit span.
+    attributes the reference stamps on its submit span. On exit the
+    span gets ``codegen.compiles``: the generated classes the JVM
+    compiled while the span was open (0 when every stage's code came
+    from the generated-code cache; JVM-wide, see
+    ``metrics.codegen_compiles``).
     """
     spark = df.sparkSession
     jid = job_id or f"trace-{job_kind}-{uuid.uuid4()}"
@@ -102,6 +107,10 @@ def traced_action(df: DataFrame, job_kind: str, job_id: str | None = None):
     sc.setJobGroup(jid, f"{job_kind} [{jid}]", interruptOnCancel=False)
     try:
         with span("job.submit", attrs) as s:
-            yield s
+            compiled = codegen_compiles(spark)
+            try:
+                yield s
+            finally:
+                s.attributes["codegen.compiles"] = codegen_compiles(spark) - compiled
     finally:
         sc.setJobGroup(None, None)

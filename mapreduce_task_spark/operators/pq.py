@@ -88,7 +88,13 @@ def _sub_dist_sql(a: str, b: str) -> str:
     already ship. Results are bit-identical (golden-hash + oracle
     gated). An unrolled ``element_at`` form measured slower:
     ``ivfpq_build_index`` median 4.04 -> 5.06 s over 6 builds each on
-    a 4-core host, identical datasets."""
+    a 4-core host, identical datasets. A lambda-free kernel, the
+    codebook collected to the driver and inlined as literal terms, was
+    slower too (same host): the fit's assignment plus ``groupBy``, timed
+    with a ``noop`` write, went from 0.52 to 3.3 s median, because
+    Janino failed to compile ``hashAgg_doAggregateWithKeys`` and Spark
+    fell back to the interpreted path; encoding went from 0.54 to
+    0.59 s. The codes were identical."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         f"CAST(0 AS BIGINT), (acc, d) -> acc + d)"

@@ -24,6 +24,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sources.literal import literal_rows
+
 
 @dataclass(frozen=True)
 class Check:
@@ -171,7 +173,8 @@ def referential_integrity(
     )
     total, orphans = row["total"], row["total"] - row["resolved"]
     metric = 1.0 if total == 0 else (total - orphans) / total
-    return fact.sparkSession.createDataFrame(
+    return literal_rows(
+        fact.sparkSession,
         [
             (
                 "referential_integrity",

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..sources.literal import literal_rows
 from .pinning import Pin
 
 K1 = 1.2
@@ -55,7 +56,7 @@ def term_frequencies(
     rows, exactly like a posting-list intersection would).
     """
     toks = doc_tokens(docs, text_col).select(id_col, "toks", "dl")
-    term_df = spark.createDataFrame([(t,) for t in terms], ["term"])
+    term_df = literal_rows(spark, [(t,) for t in terms], ["term"])
     return (
         toks.join(F.broadcast(term_df))
         .withColumn("tf", F.expr("size(filter(toks, x -> x = term))").cast("bigint"))

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..sources.literal import literal_rows
+
 
 def broadcast_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
     """Join with an explicit broadcast of the dimension side."""
@@ -194,8 +196,10 @@ def funnel_counts(
     # sides are tiny, but only the non-preserved (right) side of a left
     # outer join is broadcastable — hint the counts side (<= steps+1
     # rows), never the outer-preserved steps side
-    steps_df = events.sparkSession.createDataFrame(
-        [(i + 1, s) for i, s in enumerate(steps)], ["step_idx", "step"]
+    steps_df = literal_rows(
+        events.sparkSession,
+        [(i + 1, s) for i, s in enumerate(steps)],
+        ["step_idx", "step"],
     )
     return (
         steps_df

@@ -6,6 +6,29 @@ coalescing + skew-join splitting), shuffle partitions sized to the
 parallelism rather than the 200 default, Arrow enabled for the few
 pandas-UDF code paths, UTC session timezone so timestamp semantics are
 deployment-independent.
+
+Generated-code cache. Spark compiles every whole-stage-codegen stage
+and every projection/predicate/ordering to a Java class with Janino and
+keeps the classes in an LRU cache of ``spark.sql.codegen.cache.maxEntries``
+entries, 100 by default. The package's working sets are larger: a cold
+``ann_serve`` pass of the repo benchmark (IVF and IVF-PQ builds, both
+searches, an append, a delta search, a compaction) compiles 205-211
+classes and a cold ``batch`` pass (the MapReduce trio plus corpus
+dedup) 144, so the test suite and ``bench.py``, which run both in one
+JVM, need about 355. At 100 entries every repeated call evicts and
+recompiles the classes of the next (0.8-1.4 s of Janino time per warm
+pass) and each reloaded class starts cold in the JIT again. The builder
+sets 1000, so a repeated call of the same query shape compiles nothing
+(``tests/test_plan_health.py::test_repeated_calls_compile_nothing``;
+``obs.metrics.codegen_compiles`` reads the count). The conf is static:
+it is read once when the JVM's SQL code generator is first used, so a
+session the package did not build (``apply_runtime_confs``, the
+driver-owned session handed to ``__spark_entry__``) keeps Spark's 100.
+
+One residual is known: a streaming batch id is an inlined int literal in
+the delta-log writes (``streaming/batchlog.py``), so each new batch id
+compiles 4 classes in ``append_batch`` and 2 in ``compact_delta``.
+Query parameters such as ``nprobe`` compile nothing new.
 """
 
 from __future__ import annotations
@@ -69,6 +92,9 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(parallelism))
         .config("spark.ui.enabled", "false")
+        # static conf (read once per JVM), so builder-only; sized to the
+        # measured working sets, see the module docstring
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         # keep catalog/metastore artifacts (bucketed-table tests) out of cwd
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")

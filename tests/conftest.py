@@ -59,9 +59,6 @@ SLOW_TESTS = {
     "test_dedup.py::TestIncrementalMinhash::test_first_batch_dedups_within_batch",
     "test_dedup.py::TestIncrementalMinhash::test_genuinely_new_docs_survive",
     "test_dedup.py::TestIncrementalMinhash::test_replaying_same_batch_yields_nothing_new",
-    "test_dedup.py::test_connected_components_chain_and_islands",
-    "test_dedup.py::test_connected_components_matches_union_find",
-    "test_dedup.py::test_connected_components_warns_on_round_exhaustion",
     "test_dedup.py::test_exact_dedup_first_bounds_lsh_bucket_skew",
     "test_dedup.py::test_incremental_exact_dedup_across_ingest_batches",
     "test_dedup.py::test_null_text_is_never_a_duplicate",

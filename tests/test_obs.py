@@ -30,6 +30,11 @@ def test_traced_action_records_span(spark, sf_small):
     assert spans[-1].status == "OK"
     assert spans[-1].attributes["job.kind"] == "wordcount"
     assert spans[-1].duration_ms > 0
+    assert spans[-1].attributes["codegen.compiles"] >= 0
+    # the same action again reuses every generated class
+    with traced_action(wc, "wordcount"):
+        assert wc.count() == n
+    assert get_recorded_spans()[-1].attributes["codegen.compiles"] == 0
 
 
 def test_observe_counters(spark, sf_small):

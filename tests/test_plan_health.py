@@ -526,3 +526,138 @@ def test_near_dup_job_budget(spark, sf_small):
     dels, n_build = jobs("near_dup", near_dup)
     assert dels.count() > 0  # the fixture holds near-duplicates
     assert n_build <= 14, n_build
+
+
+def test_repeated_calls_compile_nothing(spark, sf_small, tmp_path):
+    """A repeated call of the same query shape compiles no Java class:
+    the session's generated-code cache holds the package's working set
+    (``session`` module docstring). The benchmark's ANN call sequence
+    and the MapReduce trio run one after the other, twice, each time
+    into fresh directories and over new input files, as the test suite
+    and ``bench.py`` run both in one JVM; the second run of each must
+    compile 0 classes. With Spark's default cache of 100 entries the
+    second runs compiled 206 (ANN) and 56 (trio) classes, each sequence
+    evicting the other's.
+    New inputs arrive as new files, as in the benchmark: an inlined
+    filter literal would be a new query shape."""
+    from pyspark.sql import Observation, functions as F
+
+    from mapreduce_task_spark.obs.metrics import codegen_compiles
+    from mapreduce_task_spark.operators.inverted_index import inverted_index
+    from mapreduce_task_spark.operators.pq import ivfpq_build_index, ivfpq_search_index
+    from mapreduce_task_spark.operators.similarity import (
+        ivf_build_index,
+        ivf_search_index,
+    )
+    from mapreduce_task_spark.operators.sortops import global_rank
+    from mapreduce_task_spark.operators.wordcount import wordcount
+    from mapreduce_task_spark.sources.tables import load_table
+    from mapreduce_task_spark.sources.text import (
+        read_lines,
+        read_tab_pairs,
+        write_kv_text,
+    )
+    from mapreduce_task_spark.streaming.ivf_ingest import (
+        append_batch,
+        compact_delta,
+        search_with_delta,
+    )
+    from tests.fixtures import INSERTINDEX_LINES, SORT_LINES, WORDCOUNT_LINES
+
+    emb = load_table(spark, sf_small, "embeddings")
+    corpus = str(tmp_path / "corpus")
+    emb.filter(F.col("vec_id") < 300).write.parquet(corpus)
+    runs = []
+    for r in range(2):
+        d = tmp_path / f"run{r}"
+        q, a = str(d / "queries"), str(d / "append")
+        emb.filter(F.col("vec_id") % 50 == r).write.parquet(q)
+        emb.filter(F.col("vec_id").between(300 + 40 * r, 339 + 40 * r)).write.parquet(a)
+        for name, lines in (
+            ("text", WORDCOUNT_LINES[r:]),
+            ("sort", SORT_LINES[r:]),
+            ("pairs", INSERTINDEX_LINES[r:]),
+        ):
+            (d / name).mkdir()
+            (d / name / "part-00.txt").write_text("\n".join(lines) + "\n")
+        runs.append(d)
+
+    def ann(d):
+        read = spark.read.parquet
+        ivf, ivfpq = str(d / "ivf"), str(d / "ivfpq")
+        q = str(d / "queries")
+        ivf_build_index(read(corpus), ivf, n_clusters=8, dim=64)
+        ivfpq_build_index(
+            read(corpus), ivfpq, n_clusters=8, m=8, ksub=16, dim=64, pq_rounds=1
+        )
+        assert ivf_search_index(spark, ivf, read(q), k=10, nprobe=2).collect()
+        assert ivfpq_search_index(
+            spark, ivfpq, read(q), k=10, nprobe=2, m=8, dim=64, refine=10
+        ).collect()
+        append_batch(read(str(d / "append")), 0, ivf)
+        assert search_with_delta(spark, ivf, read(q), k=10, nprobe=2).collect()
+        compact_delta(spark, ivf, 0)
+
+    def trio(d):
+        out = d / "out"
+        wc = wordcount(read_lines(spark, str(d / "text")), text_col="value")
+        write_kv_text(wc, str(out / "wordcount"), "word", "cnt")
+        ranked = global_rank(read_lines(spark, str(d / "sort")), "value")
+        write_kv_text(ranked, str(out / "sort"), "rk", "value")
+        seen = Observation("inverted_index")
+        idx = inverted_index(read_tab_pairs(spark, str(d / "pairs"), seen))
+        idx = idx.select("word", F.concat_ws("\t", "doc_ids", "n_docs").alias("v"))
+        write_kv_text(idx, str(out / "inverted_index"), "word", "v")
+        assert seen.get["MALFORMED_LINES"] == 0
+
+    compiled = {}
+    for r, d in enumerate(runs):
+        for name, seq in (("ann", ann), ("trio", trio)):
+            before = codegen_compiles(spark)
+            seq(d)
+            compiled[f"{name}.run{r}"] = codegen_compiles(spark) - before
+    assert compiled["ann.run1"] == 0 and compiled["trio.run1"] == 0, compiled
+
+
+def test_bounded_frames_are_planned_in_the_jvm(spark, sf_small):
+    """The small frames the operators build from Python values (query
+    terms, funnel steps, the referential-integrity verdict row) are
+    planned in the JVM: no ``ExistingRDD`` scan, which would start a
+    Python worker when the frame is consumed. Column types are the ones
+    ``createDataFrame`` inferred, and a verdict row of other values
+    compiles no new class."""
+    from mapreduce_task_spark.obs.metrics import codegen_compiles
+    from mapreduce_task_spark.operators.quality import referential_integrity
+    from mapreduce_task_spark.operators.ranking import term_frequencies
+    from mapreduce_task_spark.operators.relational import funnel_counts
+    from mapreduce_task_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_small, "documents")
+    events = load_table(spark, sf_small, "events")
+    orders = load_table(spark, sf_small, "orders")
+    cust = load_table(spark, sf_small, "customer")
+    frames = {
+        "term_frequencies": term_frequencies(docs, spark, ["the", "of"]),
+        "funnel_counts": funnel_counts(events, ["view", "click", "purchase"]),
+        "referential_integrity": referential_integrity(
+            orders, "o_custkey", cust, "c_custkey"
+        ),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan)
+        assert df.collect(), name
+    assert dict(frames["funnel_counts"].dtypes)["step_idx"] == "bigint"
+    assert frames["referential_integrity"].dtypes == [
+        ("check", "string"),
+        ("column", "string"),
+        ("metric", "double"),
+        ("threshold", "double"),
+        ("passed", "boolean"),
+    ]
+    before = codegen_compiles(spark)
+    [row] = referential_integrity(
+        orders, "o_custkey", cust, "c_custkey", min_fraction=0.5
+    ).collect()
+    assert row["threshold"] == 0.5
+    assert codegen_compiles(spark) - before == 0
